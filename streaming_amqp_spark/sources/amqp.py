@@ -177,8 +177,11 @@ def _coerce_str(v):
 
 
 def _rows_to_arrow_batch(rows: list[tuple]):
-    """Envelope row tuples (``_msg_to_row`` output) → one RecordBatch,
-    replicating the stock tuple-path converters exactly: string coercion,
+    """Envelope row tuples (``_msg_to_row`` output) → one RecordBatch.
+    Callers pass a non-empty list: the simple reader and
+    ``_spool_range_batches`` both flush only non-empty buffers.
+
+    Replicates the stock tuple-path converters exactly: string coercion,
     map dict → entry list, naive timestamp interpreted via astimezone(UTC)
     (identical to conversion.py's TimestampType converter).
 
@@ -229,18 +232,39 @@ def _rows_to_arrow_batch(rows: list[tuple]):
 
 
 def _parse_spool_line(line: str) -> dict | None:
-    """One spool-file line → message dict, or None for a malformed /
-    non-object line (SURVEY §7.4.2 drop-don't-crash semantics — shared by
-    the streaming SpoolTransport and the batch reader so the two paths
-    can never diverge)."""
-    line = line.strip()
-    if not line:
-        return None
+    """One decoded, non-blank spool line → message dict, or None for a
+    malformed or non-object line (SURVEY §7.4.2 drop-don't-crash).  Only
+    ``_parse_spool_lines`` calls it; the whole spool-line rule is stated
+    on ``SpoolTransport``."""
     try:
         msg = json.loads(line)
     except ValueError:
         return None
     return msg if isinstance(msg, dict) else None
+
+
+def _parse_spool_lines(data: bytes) -> tuple[list[dict], int]:
+    """Spool bytes → (messages, malformed count): the one parse loop of
+    every spool reader.  Bytes after the last newline are ignored."""
+    msgs: list[dict] = []
+    malformed = 0
+    for raw in data[: data.rfind(b"\n") + 1].splitlines():
+        line = raw.decode("utf-8", errors="replace")
+        if line.strip():
+            if (msg := _parse_spool_line(line)) is not None:
+                msgs.append(msg)
+            else:
+                malformed += 1
+    return msgs, malformed
+
+
+def _spool_files(spool_dir: str) -> list[str]:
+    """The ``.jsonl`` files of a spool directory, in consumption order."""
+    return sorted(
+        os.path.join(spool_dir, f)
+        for f in os.listdir(spool_dir)
+        if f.endswith(".jsonl")
+    )
 
 
 def _retry_on_disconnect(op, reconnect):
@@ -290,6 +314,15 @@ class SpoolTransport(Transport):
     in tests exactly like the reference's embedded ActiveMQ / in-process
     ProtonServer (AMQPTestUtils.scala:66-91,213-266).
 
+    The spool-line rule, which every spool reader (``fetch``, ``replay``,
+    ``AMQPScaleOutStreamReader``, ``AMQPBatchReader``) applies through
+    ``_parse_spool_lines``: a message is one newline-terminated line (the
+    terminated prefix splits as ``bytes.splitlines`` does), decoded as
+    UTF-8 with invalid bytes replaced, parsed as a JSON object.  A blank
+    line is skipped; a malformed or non-object line is dropped (``fetch``
+    counts it in ``malformed``); bytes after a file's last newline stay
+    unread until their newline arrives.
+
     ``fetch`` tail-reads incrementally: a per-file byte high-water mark
     means each appended line is read and parsed exactly once over the
     stream's lifetime — O(new data) per micro-batch, not O(total spool)
@@ -308,7 +341,7 @@ class SpoolTransport(Transport):
         # (ReliableAMQPReceiver.scala:127).  The resolved semantic here:
         # drop AND count — the stream never dies, the loss is observable.
         self.malformed = 0
-        self._offsets: dict[str, int] = {}  # fname -> next unread byte
+        self._offsets: dict[str, int] = {}  # path -> next unread byte
         self._pending: deque[dict] = deque()
         self._to_skip = 0  # checkpoint fast-forward debt (see skip())
 
@@ -317,27 +350,17 @@ class SpoolTransport(Transport):
         (newline-terminated) lines are consumed; a partially-flushed tail
         stays unread — its offset un-advanced — until its newline arrives,
         so a mid-write poll can never parse half a message."""
-        for fname in sorted(os.listdir(self.spool_dir)):
-            if not fname.endswith(".jsonl"):
-                continue
-            path = os.path.join(self.spool_dir, fname)
-            off = self._offsets.get(fname, 0)
+        for path in _spool_files(self.spool_dir):
+            off = self._offsets.get(path, 0)
             if os.path.getsize(path) <= off:
                 continue
             with open(path, "rb") as f:
                 f.seek(off)
                 data = f.read()
-            end = data.rfind(b"\n") + 1
-            if end == 0:
-                continue
-            self._offsets[fname] = off + end
-            for raw in data[:end].splitlines():
-                line = raw.decode("utf-8", errors="replace")
-                if line.strip():
-                    if (msg := _parse_spool_line(line)) is not None:
-                        self._pending.append(msg)
-                    else:
-                        self.malformed += 1
+            self._offsets[path] = off + data.rfind(b"\n") + 1
+            msgs, malformed = _parse_spool_lines(data)
+            self._pending.extend(msgs)
+            self.malformed += malformed
 
     def skip(self, n: int) -> None:
         """Checkpoint-recovery fast-forward: drop the next ``n`` messages
@@ -361,18 +384,14 @@ class SpoolTransport(Transport):
     def replay(self, start: int, end: int) -> list[dict]:
         """Full-rescan slow path for offset-range replay after a restart
         (≡ WAL block re-read); leaves the incremental cursor and the
-        malformed counter untouched."""
+        malformed counter untouched.  Stops after the file that brings the
+        count to ``end``."""
         out: list[dict] = []
-        for fname in sorted(os.listdir(self.spool_dir)):
-            if not fname.endswith(".jsonl"):
-                continue
-            with open(os.path.join(self.spool_dir, fname)) as f:
-                for line in f:
-                    if line.strip():
-                        if (msg := _parse_spool_line(line)) is not None:
-                            out.append(msg)
-                            if len(out) >= end:
-                                return out[start:end]
+        for path in _spool_files(self.spool_dir):
+            with open(path, "rb") as f:
+                out += _parse_spool_lines(f.read(_complete_bytes(path)))[0]
+            if len(out) >= end:
+                break
         return out[start:end]
 
 
@@ -566,9 +585,6 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
             lambda: self.transport.fetch(max_n), self.transport.reconnect
         )
 
-    def _to_row(self, msg: dict) -> tuple:
-        return _msg_to_row(msg)
-
     def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         # Restart resync (≡ checkpoint recovery via StreamingContext.
         # getOrCreate, AMQPTemperature.scala:61): a fresh reader starts at
@@ -590,7 +606,7 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
         if self.target_batch_s:
             admit = min(admit, self._adaptive_cap)
         msgs = self._fetch_with_reconnect(admit)
-        rows = [self._to_row(m) for m in msgs]
+        rows = [_msg_to_row(m) for m in msgs]
         base = self._seq
         self._retained.extend((base + i, r) for i, r in enumerate(rows))
         self._seq = base + len(rows)
@@ -619,7 +635,7 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
             return iter(replay)
         if isinstance(self.transport, SpoolTransport):  # replayable transport
             return iter(
-                self._to_row(m) for m in self.transport.replay(lo, hi)
+                _msg_to_row(m) for m in self.transport.replay(lo, hi)
             )
         # non-replayable transport with settled messages: at-least-once means
         # the committed prefix is gone; only the retained tail is available.
@@ -694,11 +710,39 @@ def _next_newline(path: str, off: int, chunk: int = 1 << 16) -> int | None:
 
 
 class _SpoolRangePartition(InputPartition):
-    """One spool directory's new byte ranges for one micro-batch:
-    ``ranges`` = [(file path, start byte, end byte)], newline-aligned."""
+    """Newline-aligned spool byte ranges read by one task:
+    ``ranges`` = [(file path, start byte, end byte)].  The scale-out reader
+    makes one per directory per micro-batch, the batch reader one per
+    file; an empty list is the no-data partition Spark requires."""
 
     def __init__(self, ranges: list[tuple[str, int, int]]):
         self.ranges = ranges
+
+
+SPOOL_READ_BYTES = 1 << 16  # read block of a range; bounds a task's memory
+
+
+def _spool_range_batches(ranges: list[tuple[str, int, int]]) -> Iterator:
+    """Newline-aligned ``(path, lo, hi)`` ranges → RecordBatches of
+    ``ARROW_ROWS_PER_BATCH`` rows (the last may be shorter) — columnar all
+    the way to the JVM (the tuple path's per-row converter loop dominated
+    the measured per-batch cost).  A range is read in ``SPOOL_READ_BYTES``
+    blocks; a block's unterminated tail carries into the next block."""
+    buf: list[tuple] = []
+    for path, lo, hi in ranges:
+        with open(path, "rb") as f:
+            f.seek(lo)
+            carry = b""
+            while lo < hi and (block := f.read(min(SPOOL_READ_BYTES, hi - lo))):
+                lo += len(block)
+                data = carry + block
+                carry = data[data.rfind(b"\n") + 1 :]
+                buf += map(_msg_to_row, _parse_spool_lines(data)[0])
+                while len(buf) >= ARROW_ROWS_PER_BATCH:
+                    yield _rows_to_arrow_batch(buf[:ARROW_ROWS_PER_BATCH])
+                    del buf[:ARROW_ROWS_PER_BATCH]
+    if buf:
+        yield _rows_to_arrow_batch(buf)
 
 
 class AMQPScaleOutStreamReader(DataSourceStreamReader):
@@ -711,7 +755,8 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
     Division of labour at scale: the driver's ``latestOffset`` does
     metadata-only work (file sizes + a tail probe for the last newline,
     O(#files) regardless of data volume); executors parse their assigned
-    newline-aligned byte ranges in parallel.  Offsets are plain
+    newline-aligned byte ranges in parallel, by the spool-line rule stated
+    on ``SpoolTransport``.  Offsets are plain
     {dir: {file: completed-byte}} maps, so any (start, end] range is
     replayable from the files themselves — exactly-once for a durable
     spool, with none of the driver-funnel ceiling of the simple reader.
@@ -736,13 +781,6 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
         self.max_bytes = int(options.get("maxbytesperbatch", 0)) or None
         self._last: dict | None = None
 
-    def _dir_files(self, d: str) -> list[str]:
-        return sorted(
-            os.path.join(d, f)
-            for f in os.listdir(d)
-            if f.endswith(".jsonl")
-        )
-
     def initialOffset(self) -> dict:
         return {d: {} for d in self.spool_dirs}
 
@@ -762,7 +800,7 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
             prev_d = prev.get(d, {})
             cur: dict = {}
             budget = self.max_bytes
-            for p in self._dir_files(d):
+            for p in _spool_files(d):
                 lo = prev_d.get(p, 0)
                 if budget is None or first_call:
                     hi = _complete_bytes(p)
@@ -803,44 +841,12 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
             ]
             if ranges:
                 parts.append(_SpoolRangePartition(ranges))
-        return parts or [_EmptyPartition()]
+        return parts or [_SpoolRangePartition([])]
 
-    def read(self, partition: InputPartition) -> Iterator:
-        # Yields RecordBatches, not tuples: columnar all the way to the JVM
-        # (see _rows_to_arrow_batch — the tuple path's per-row converter
-        # loop dominated the measured per-batch cost).
-        if isinstance(partition, _EmptyPartition):
-            return
-        buf: list[tuple] = []
-        for path, lo, hi in partition.ranges:
-            with open(path, "rb") as f:
-                f.seek(lo)
-                data = f.read(hi - lo)
-            for raw in data.splitlines():
-                line = raw.decode("utf-8", errors="replace")
-                if line.strip():
-                    if (msg := _parse_spool_line(line)) is not None:
-                        buf.append(_msg_to_row(msg))
-                        if len(buf) >= ARROW_ROWS_PER_BATCH:
-                            yield _rows_to_arrow_batch(buf)
-                            buf = []
-        if buf:
-            yield _rows_to_arrow_batch(buf)
+    def read(self, partition: _SpoolRangePartition) -> Iterator:
+        return _spool_range_batches(partition.ranges)
 
     def commit(self, end: dict) -> None:
-        pass
-
-
-class _SpoolFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class _EmptyPartition(InputPartition):
-    """Explicit no-data partition for an empty spool directory (Spark
-    requires at least one partition per scan)."""
-
-    def __init__(self):
         pass
 
 
@@ -859,7 +865,9 @@ class AMQPBatchReader(DataSourceReader):
     spool file (``transport=spool``) or per AMQP address
     (comma-separated ``address`` list for a live link), so a 100 TB spool
     directory reads wide exactly like Spark's file sources; nothing funnels
-    through the driver.
+    through the driver.  A spool file's partition is its newline-terminated
+    prefix as of ``partitions()``, read by the spool-line rule stated on
+    ``SpoolTransport``.
     """
 
     def __init__(self, options: dict):
@@ -868,34 +876,16 @@ class AMQPBatchReader(DataSourceReader):
 
     def partitions(self) -> list[InputPartition]:
         if self.kind == "spool":
-            spool = self.options["spooldir"]
-            files = sorted(
-                os.path.join(spool, f)
-                for f in os.listdir(spool)
-                if f.endswith(".jsonl")
-            )
-            return [_SpoolFilePartition(p) for p in files] or [_EmptyPartition()]
+            files = _spool_files(self.options["spooldir"])
+            return [
+                _SpoolRangePartition([(p, 0, _complete_bytes(p))]) for p in files
+            ] or [_SpoolRangePartition([])]
         addresses = self.options.get("address", "spark").split(",")
         return [_AddressPartition(a.strip()) for a in addresses]
 
     def read(self, partition: InputPartition) -> Iterator:
-        if isinstance(partition, _EmptyPartition):
-            return
-        if isinstance(partition, _SpoolFilePartition):
-            # same drop-and-count semantics as the streaming SpoolTransport
-            # (SURVEY §7.4.2): a malformed or non-object line never fails
-            # the task.  Rows ship as RecordBatches (columnar boundary —
-            # see _rows_to_arrow_batch).
-            buf: list[tuple] = []
-            with open(partition.path) as f:
-                for line in f:
-                    if (msg := _parse_spool_line(line)) is not None:
-                        buf.append(_msg_to_row(msg))
-                        if len(buf) >= ARROW_ROWS_PER_BATCH:
-                            yield _rows_to_arrow_batch(buf)
-                            buf = []
-            if buf:
-                yield _rows_to_arrow_batch(buf)
+        if isinstance(partition, _SpoolRangePartition):
+            yield from _spool_range_batches(partition.ranges)
             return
         # live link: per-partition connection, drain until empty, settle all
         transport = QpidTransport(  # pragma: no cover - no AMQP stack in image

@@ -13,6 +13,8 @@ import pytest
 from tests.conftest import envelope_rows
 
 from streaming_amqp_spark.sources.amqp import (
+    AMQPBatchReader,
+    AMQPScaleOutStreamReader,
     AMQPStreamReader,
     AMQPWriter,
     RECONNECT_MAX_ATTEMPTS,
@@ -222,6 +224,51 @@ def test_batch_read_drops_malformed_lines(spark, tmp_path):
         .load()
     )
     assert sorted(r.message_id for r in got.collect()) == ["ok", "ok2"]
+
+
+def _ids_via_fetch(spool):
+    return [m["message_id"] for m in SpoolTransport(spool).fetch(100)]
+
+
+def _ids_via_replay(spool):
+    return [m["message_id"] for m in SpoolTransport(spool).replay(0, 100)]
+
+
+def _ids_via_scaleout(spool):
+    r = AMQPScaleOutStreamReader({"spooldirs": spool})
+    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    return [row[0] for p in parts for row in envelope_rows(r.read(p))]
+
+
+def _ids_via_batch(spool):
+    r = AMQPBatchReader({"transport": "spool", "spooldir": spool})
+    return [row[0] for p in r.partitions() for row in envelope_rows(r.read(p))]
+
+
+@pytest.mark.parametrize(
+    "read_ids",
+    [_ids_via_fetch, _ids_via_replay, _ids_via_scaleout, _ids_via_batch],
+    ids=["fetch", "replay", "scaleout", "batch"],
+)
+def test_every_spool_path_applies_one_line_rule(tmp_path, read_ids):
+    """The stream's first read, its replay, the scale-out reader and the
+    batch reader agree on what a spool message is: invalid UTF-8 is
+    replaced, malformed and non-object lines are dropped, and an
+    unterminated tail is left unread until its newline arrives."""
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    p = spool / "000.jsonl"
+    p.write_bytes(
+        b'{"message_id": "a", "body": "ok"}\n'
+        b'{"message_id": "b", "body": "caf\xff"}\n'
+        b"{not json\n"
+        b'"a bare json string"\n'
+        b'{"message_id": "c", "body": "tail"}'
+    )
+    assert read_ids(str(spool)) == ["a", "b"]
+    with open(p, "ab") as f:
+        f.write(b"\n")
+    assert read_ids(str(spool)) == ["a", "b", "c"]
 
 
 class RecordingSender:
