@@ -17,9 +17,11 @@ Semantics mapping (reference → here):
   (AMQPFlowController.scala:55-56,92-94,131-141) → ``maxMessagesPerBatch``
   admission cap + the transport's credit window (same defaults).
 - Reliable receiver — buffer, store block, then send AMQP ``Accepted``
-  (ReliableAMQPReceiver.scala:111-169) → messages are retained in the
-  reader buffer until Spark calls ``commit(offset)``, which settles them;
-  a restart replays the unsettled tail ⇒ the same at-least-once guarantee.
+  (ReliableAMQPReceiver.scala:111-169) → messages stay unsettled until
+  Spark calls ``commit(offset)``, which settles them.  The reader keeps no
+  copy: within a run Spark's prefetch cache replays a batch; after a
+  restart the spool replays the offset range (exactly once) or the broker
+  redelivers the unsettled tail (at least once).
 - Unreliable receiver (AMQPReceiver.scala:159-162) → ``reliable=false``
   settles on receive (at-most-once on failure).
 - Rate controllers (AMQPRateController.scala) → admission control: at most
@@ -520,11 +522,13 @@ class QpidTransport(Transport):
 class AMQPStreamReader(SimpleDataSourceStreamReader):
     """Offset/commit protocol over a Transport.
 
-    Offset = {"seq": total messages admitted}.  Messages fetched but not
-    yet committed stay in ``_retained`` so ``readBetweenOffsets`` can
-    replay a failed batch (≡ WAL-backed block replay in the reference);
-    ``commit`` settles and drops them (≡ store-then-ack,
-    ReliableAMQPReceiver.scala:111-159).
+    Offset = {"seq": total messages admitted}.  ``read`` keeps no copy
+    of a batch (Spark's prefetch cache does, until commit); ``commit``
+    settles the messages below its offset (≡ store-then-ack,
+    ReliableAMQPReceiver.scala:111-159).  After a restart a fresh reader's
+    ``readBetweenOffsets`` replays (≡ WAL block replay): the spool replays
+    the range exactly once, a live link nothing — the broker redelivers
+    what was never settled (at least once).
     """
 
     def __init__(self, options: dict):
@@ -555,21 +559,14 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
         # these into observed batch-processing durations
         self._batch_done: dict[int, tuple[float, int]] = {}
         self.reliable = options.get("reliable", "true").lower() == "true"
-        transport_kind = options.get("transport", "qpid")
-        if transport_kind == "spool":
-            self.transport: Transport = SpoolTransport(options["spooldir"])
-        else:
-            self.transport = QpidTransport(
-                host=options.get("host", "localhost"),
-                port=int(options.get("port", 5672)),
-                address=options.get("address", "spark"),
-                username=options.get("username"),
-                password=options.get("password"),
-                credit_window=self.max_per_batch,
-                reliable=self.reliable,
-            )
+        # A spool replays any offset range; a live link replays nothing and
+        # opens on the first read, so a replay-only reader never connects.
+        self._replayable = options.get("transport", "qpid") == "spool"
+        self.transport: Transport | None = (
+            SpoolTransport(options["spooldir"]) if self._replayable else None
+        )
         self._seq = 0
-        self._retained: list[tuple[int, tuple]] = []  # (seq, row)
+        self._settled = 0  # messages below this seq are settled
 
     def initialOffset(self) -> dict:
         return {"seq": 0}
@@ -577,24 +574,34 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
     def _fetch_with_reconnect(self, max_n: int) -> list[dict]:
         """transport.fetch with restart-on-disconnect (≡ the reference's
         Receiver.restart on close/disconnect, AMQPReceiver.scala:121-151):
-        exponential backoff, then transport.reconnect() and retry.  Rows
-        already retained from earlier batches are untouched; a broker that
-        redelivers the in-flight tail yields duplicates, the same
-        at-least-once guarantee as the reference's WAL path."""
+        exponential backoff, then transport.reconnect() and retry.  A
+        broker that redelivers the in-flight tail yields duplicates, the
+        same at-least-once guarantee as the reference's WAL path."""
         return _retry_on_disconnect(
             lambda: self.transport.fetch(max_n), self.transport.reconnect
         )
 
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
+    def read(self, start: dict) -> tuple[Iterator, dict]:
         # Restart resync (≡ checkpoint recovery via StreamingContext.
         # getOrCreate, AMQPTemperature.scala:61): a fresh reader starts at
-        # seq 0 but Spark hands us the checkpointed offset. For a replayable
-        # transport, fast-forward past the committed prefix; for a live AMQP
-        # link the broker redelivers unsettled messages itself and committed
-        # ones were already settled (at-least-once either way).
-        if start["seq"] > self._seq and isinstance(self.transport, SpoolTransport):
-            self.transport.skip(start["seq"] - self._seq)
-            self._seq = start["seq"]
+        # seq 0 but Spark hands us the checkpointed offset, below which
+        # everything is committed and settled.  A spool fast-forwards past
+        # that prefix; a live link's broker holds none of it.
+        if start["seq"] > self._seq:
+            if self._replayable:
+                self.transport.skip(start["seq"] - self._seq)
+            self._seq = self._settled = start["seq"]
+        if self.transport is None:
+            o = self.options
+            self.transport = QpidTransport(
+                host=o.get("host", "localhost"),
+                port=int(o.get("port", 5672)),
+                address=o.get("address", "spark"),
+                username=o.get("username"),
+                password=o.get("password"),
+                credit_window=self.max_per_batch,
+                reliable=self.reliable,
+            )
         now = time.monotonic()
         elapsed = (
             now - self._last_read_t if self._last_read_t is not None else 1.0
@@ -605,47 +612,35 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
             admit = min(admit, max(1, int(self.max_rate * elapsed)))
         if self.target_batch_s:
             admit = min(admit, self._adaptive_cap)
-        msgs = self._fetch_with_reconnect(admit)
-        rows = [_msg_to_row(m) for m in msgs]
-        base = self._seq
-        self._retained.extend((base + i, r) for i, r in enumerate(rows))
-        self._seq = base + len(rows)
-        if not self.reliable:
-            self._retained.clear()
+        rows = [_msg_to_row(m) for m in self._fetch_with_reconnect(admit)]
+        self._seq += len(rows)
+        if not self.reliable:  # the transport settled them on receive
+            self._settled = self._seq
         if self.target_batch_s and rows:
             # commit(end) closes this sample into a processing duration;
             # bound the map in case an epoch is never committed (restart)
             self._batch_done[self._seq] = (time.monotonic(), len(rows))
             while len(self._batch_done) > 64:
                 self._batch_done.pop(next(iter(self._batch_done)))
-        # Ship as ONE RecordBatch (columnar boundary — the driver-side
-        # prefetch cache passes it to the JVM unconverted; the tuple
-        # path's per-row converter loop was the measured bottleneck).
-        # An empty read MUST return an empty iterator, not a 0-row batch:
-        # the engine treats any yielded element with an unchanged offset
-        # as OFFSET_DID_NOT_ADVANCE.  Rows stay retained as tuples for
-        # readBetweenOffsets replay (per-message granularity).
-        out = iter([_rows_to_arrow_batch(rows)]) if rows else iter(())
+        # One RecordBatch, or none: Spark's prefetch cache holds it until
+        # commit, and an element yielded with an unchanged offset would be
+        # OFFSET_DID_NOT_ADVANCE.
+        out = iter([_rows_to_arrow_batch(rows)] if rows else ())
         return out, {"seq": self._seq}
 
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        lo, hi = start["seq"], end["seq"]
-        replay = [r for s, r in self._retained if lo <= s < hi]
-        if len(replay) == hi - lo:
-            return iter(replay)
-        if isinstance(self.transport, SpoolTransport):  # replayable transport
-            return iter(
-                _msg_to_row(m) for m in self.transport.replay(lo, hi)
-            )
-        # non-replayable transport with settled messages: at-least-once means
-        # the committed prefix is gone; only the retained tail is available.
-        return iter(replay)
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
+        if not self._replayable:
+            return iter(())  # the broker redelivers the unsettled tail
+        msgs = self.transport.replay(start["seq"], end["seq"])
+        rows = [_msg_to_row(m) for m in msgs]
+        return iter([_rows_to_arrow_batch(rows)] if rows else ())
 
     def commit(self, end: dict) -> None:
         upto = end["seq"]
-        n_settle = sum(1 for s, _ in self._retained if s < upto)
-        self.transport.settle(n_settle)
-        self._retained = [(s, r) for s, r in self._retained if s >= upto]
+        n_settle = min(upto, self._seq) - self._settled
+        if n_settle > 0:
+            self.transport.settle(n_settle)
+            self._settled += n_settle
         # Adaptive admission (full A10/A11 parity: the latent controllers
         # track Spark's PID-driven blockGenerator.getCurrentLimit,
         # AMQPRateController.scala:56,214-215).  commit(end) fires after

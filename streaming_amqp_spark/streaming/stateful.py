@@ -88,88 +88,6 @@ def _make_update(ttl_ms: int | None):
     return _update
 
 
-try:  # Spark 4.x transformWithState API — ALSO needs the protobuf python
-    # package at runtime (its driver-side state server speaks protobuf);
-    # absent in this container, so callers must check HAVE_TWS first.
-    from google.protobuf import descriptor  # noqa: F401
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningStatsProcessor(StatefulProcessor):
-        """transformWithStateInPandas twin of ``running_device_stats``:
-        explicit ValueState (count, sum, max) per device — the
-        RocksDB-backed arbitrary-state API that supersedes
-        applyInPandasWithState in Spark 4."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "stats", "n BIGINT, total DOUBLE, mx DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, total, mx = self._state.get()
-            else:
-                n, total, mx = 0, 0.0, float("-inf")
-            for pdf in rows:
-                n += len(pdf)
-                if len(pdf):
-                    total += float(pdf["value"].sum())
-                    mx = max(mx, float(pdf["value"].max()))
-            self._state.update((n, total, mx))
-            yield pd.DataFrame(
-                {
-                    "device": [key[0]],
-                    "n_messages": [n],
-                    "mean_value": [total / n if n else None],
-                    "max_value": [mx],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    HAVE_TWS = True
-except ImportError:  # pragma: no cover - older Spark
-    HAVE_TWS = False
-
-
-TWS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("device", StringType()),
-        StructField("n_messages", LongType()),
-        StructField("mean_value", DoubleType()),
-        StructField("max_value", DoubleType()),
-    ]
-)
-
-
-def running_device_stats_tws(envelope: DataFrame) -> DataFrame:
-    """running_device_stats via transformWithStateInPandas (needs the
-    RocksDB state store provider — set
-    spark.sql.streaming.stateStore.providerClass accordingly)."""
-    from pyspark.sql import functions as F
-
-    from streaming_amqp_spark.envelope import BODY_TYPE_VALUE
-
-    vals = (
-        envelope.where(F.col("body_type") == BODY_TYPE_VALUE)
-        .select(
-            F.col("to_address").alias("device"),
-            F.col("body").try_cast("double").alias("value"),
-        )
-        .where(F.col("value").isNotNull())
-    )
-    return vals.groupBy("device").transformWithStateInPandas(
-        statefulProcessor=RunningStatsProcessor(),
-        outputStructType=TWS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 FUNNEL_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),

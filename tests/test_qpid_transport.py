@@ -258,3 +258,38 @@ def test_close_closes_connection(proton_stub):
     t = _transport(reliable=False)
     t.close()
     assert FakeConnection.instances[0].closed
+
+
+def _live_reader():
+    from streaming_amqp_spark.sources.amqp import AMQPStreamReader
+
+    return AMQPStreamReader({"transport": "qpid", "address": "q1"})
+
+
+def test_restarted_live_reader_resumes_checkpointed_offset(proton_stub):
+    """A fresh live-link reader handed a checkpointed start numbers its
+    offsets from there, and commit settles just what it read."""
+    from tests.conftest import envelope_rows
+
+    ds = _deliveries(5)
+    FakeConnection.pending = list(ds)
+    r = _live_reader()
+    rows, end = r.read({"seq": 100})
+    assert len(envelope_rows(rows)) == 5 and end == {"seq": 105}
+    assert not any(d.settled for d in ds)
+    r.commit({"seq": 105})
+    assert all(d.settled for d in ds)
+    assert r.transport._unsettled == []
+
+
+def test_replay_only_reader_opens_no_link(proton_stub):
+    """Spark builds a reader just to replay an offset range after a
+    restart; a live link has nothing to replay (the broker redelivers),
+    so only the first read opens a connection."""
+    r = _live_reader()
+    assert list(r.readBetweenOffsets({"seq": 0}, {"seq": 3})) == []
+    assert FakeConnection.instances == []
+    FakeConnection.pending = _deliveries(2)
+    r.read(r.initialOffset())
+    r.read({"seq": 2})
+    assert len(FakeConnection.instances) == 1

@@ -39,12 +39,14 @@ def _msgs(n, start=0):
 
 class FlakyTransport(SpoolTransport):
     """Throws TransportDisconnected on the first ``fail_times`` fetches —
-    the spool twin of a broker bouncing mid-fetch."""
+    the spool twin of a broker bouncing mid-fetch — and records each
+    ``settle(n)``."""
 
     def __init__(self, spool_dir: str, fail_times: int):
         super().__init__(spool_dir)
         self.fail_times = fail_times
         self.reconnects = 0
+        self.settled: list[int] = []
 
     def fetch(self, max_n):
         if self.fail_times > 0:
@@ -54,6 +56,9 @@ class FlakyTransport(SpoolTransport):
 
     def reconnect(self):
         self.reconnects += 1
+
+    def settle(self, n):
+        self.settled.append(n)
 
 
 def _reader(spool, **opts):
@@ -73,18 +78,22 @@ def test_reconnect_survives_transient_disconnect(tmp_path):
 
 
 def test_reconnect_preserves_unsettled_buffer(tmp_path):
+    """A reconnect between a batch's read and its commit loses nothing:
+    commit settles exactly the committed messages, and the spool still
+    replays the uncommitted batch."""
     spool = _write_spool(tmp_path, _msgs(3))
     r = _reader(spool)
     r.transport = FlakyTransport(spool, fail_times=0)
-    envelope_rows(r.read(r.initialOffset())[0])  # batch 1 retained (uncommitted)
-    assert len(r._retained) == 3
+    _, off1 = r.read(r.initialOffset())  # batch 1, not yet committed
     _write_spool(tmp_path, _msgs(2, start=3), fname="001.jsonl")
     r.transport.fail_times = 1  # drop mid-stream before batch 2
-    rows, off = r.read({"seq": 3})
+    rows, off = r.read(off1)
     assert len(envelope_rows(rows)) == 2 and off == {"seq": 5}
-    # batch-1 rows still replayable after the reconnect
-    assert len(r._retained) == 5
-    assert len(list(r.readBetweenOffsets({"seq": 0}, {"seq": 3}))) == 3
+    assert r.transport.settled == []  # nothing settles before its commit
+    r.commit(off1)
+    r.commit(off)
+    assert r.transport.settled == [3, 2]
+    assert len(envelope_rows(r.readBetweenOffsets({"seq": 0}, {"seq": 3}))) == 3
 
 
 def test_reconnect_gives_up_after_max_attempts(tmp_path):
@@ -119,6 +128,55 @@ def test_adaptive_admission_shrinks_then_regrows(tmp_path):
     rows3, off3 = r.read(off2)
     assert len(envelope_rows(rows3)) == before
     r.commit(off3)
+
+
+def test_simple_reader_restart_replays_uncommitted_batch(spark, tmp_path):
+    """A restart whose last batch was planned but never committed replays
+    that batch from the spool on a fresh reader (Spark's prefetch cache
+    died with the first run): the same messages for the same offsets,
+    then the new tail, so the only duplicates are that batch's."""
+    register_amqp_source(spark)
+    spool = _write_spool(tmp_path, _msgs(100))
+    ckpt = tmp_path / "ckpt"
+    batches: list[tuple[int, list[str]]] = []
+
+    def run_once():
+        df = (
+            spark.readStream.format("amqp")
+            .option("transport", "spool")
+            .option("spooldir", spool)
+            .option("maxMessagesPerBatch", "30")
+            .load()
+        )
+        q = (
+            df.writeStream.foreachBatch(
+                lambda b, epoch: batches.append(
+                    (epoch, [r.message_id for r in b.collect()])
+                )
+            )
+            .option("checkpointLocation", str(ckpt))
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+
+    run_once()
+    last = max(epoch for epoch, _ in batches)
+    assert [ids for epoch, ids in batches if epoch == last] == [
+        [f"m{i}" for i in range(90, 100)]
+    ]
+    (ckpt / "commits" / str(last)).unlink()
+    (ckpt / "commits" / f".{last}.crc").unlink(missing_ok=True)
+    n_first = len(batches)
+    _write_spool(tmp_path, _msgs(40, start=100), fname="001.jsonl")
+    run_once()
+
+    replayed = batches[n_first]
+    assert replayed == (last, [f"m{i}" for i in range(90, 100)])
+    ids = [i for _, batch in batches for i in batch]
+    assert sorted(set(ids)) == sorted(f"m{i}" for i in range(140))
+    dupes = sorted(i for i in set(ids) if ids.count(i) > 1)
+    assert dupes == sorted(f"m{i}" for i in range(90, 100))
 
 
 def test_batch_publish_twice_no_silent_overwrite(spark, tmp_path):

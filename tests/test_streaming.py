@@ -644,27 +644,6 @@ def test_streaming_sliding_windows(amqp, tmp_path):
     assert starts == ["2024-01-01T00:00:00", "2024-01-01T00:00:05"]
 
 
-def test_stateful_tws_running_stats(amqp, tmp_path):
-    """transformWithStateInPandas twin of the stateful operator (needs
-    google.protobuf at runtime - skipped where unavailable)."""
-    from streaming_amqp_spark.streaming import stateful
-
-    if not stateful.HAVE_TWS:
-        pytest.skip("transformWithStateInPandas needs google.protobuf")
-    msgs = _temperature_messages()
-    spool = _write_spool(tmp_path, msgs)
-    env = (
-        amqp.readStream.format("amqp")
-        .option("transport", "spool")
-        .option("spooldir", spool)
-        .load()
-    )
-    stats = stateful.running_device_stats_tws(env)
-    out = _run_stream_to_memory(amqp, stats, "tws_out", output_mode="update")
-    final = out.collect()[-1]
-    assert final.n_messages == 5 and final.max_value == 24.0
-
-
 def test_malformed_messages_dropped_and_counted(amqp, tmp_path):
     """Converter-crash semantics resolved per SURVEY §7.4.2: a message the
     converter can't parse is dropped (stream survives) and counted — never
@@ -756,8 +735,9 @@ def test_stateful_streaming_funnel(amqp, tmp_path):
 
 def test_unreliable_mode_settles_on_receive(amqp, tmp_path):
     """A5 parity: reliable=false ≡ the unreliable receiver's store-as-you-go
-    (AMQPReceiver.scala:159-162) — messages settle on receive, nothing is
-    retained for commit-time replay (at-most-once on failure)."""
+    (AMQPReceiver.scala:159-162) — messages settle on receive, so commit
+    settles nothing (at-most-once on failure); reliable mode settles
+    exactly the committed messages at commit."""
     spool = _write_spool(tmp_path, _temperature_messages())
     df = (
         amqp.readStream.format("amqp")
@@ -769,23 +749,34 @@ def test_unreliable_mode_settles_on_receive(amqp, tmp_path):
     out = _run_stream_to_memory(amqp, df, "unreliable_out")
     assert out.count() == 5  # ingestion itself is identical
 
-    from streaming_amqp_spark.sources.amqp import AMQPStreamReader
+    from streaming_amqp_spark.sources.amqp import AMQPStreamReader, SpoolTransport
+
+    class RecordingTransport(SpoolTransport):
+        def __init__(self, spool_dir):
+            super().__init__(spool_dir)
+            self.settled: list[int] = []
+
+        def settle(self, n):
+            self.settled.append(n)
 
     r = AMQPStreamReader(
         {"transport": "spool", "spooldir": spool, "reliable": "false"}
     )
+    r.transport = RecordingTransport(spool)
     rows, end = r.read(r.initialOffset())
     assert len(envelope_rows(rows)) == 5 and end == {"seq": 5}
-    assert r._retained == []  # settled on receive — no replay buffer
+    r.commit(end)
+    assert r.transport.settled == []  # settled on receive, not at commit
 
     r2 = AMQPStreamReader(
         {"transport": "spool", "spooldir": spool, "reliable": "true"}
     )
+    r2.transport = RecordingTransport(spool)
     rows2, end2 = r2.read(r2.initialOffset())
     assert len(envelope_rows(rows2)) == 5
-    assert len(r2._retained) == 5  # reliable mode retains until commit
+    assert r2.transport.settled == []  # reliable mode holds until commit
     r2.commit(end2)
-    assert r2._retained == []
+    assert r2.transport.settled == [5]
 
 
 def test_watermark_drops_late_data(amqp, tmp_path):
