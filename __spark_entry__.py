@@ -83,11 +83,8 @@ _FIRST_50 = (
     "curate_substring_policy", "contamination_fuzzy", "text_vocab_growth",
     "events_funnel", "rfm_segmentation", "orders_backlog_sweepline",
     "q1_pricing_summary", "ann_pq_adc", "dedup_ngram_jaccard",
-    # r11-stale (latest verdict is r11) — the full cohort
-    "anti_join_idle_customers", "dedup_chunk_cdc", "dedup_minhash_recall",
-    "domain_mixture_weights", "embedding_l2_normalize",
-    "embedding_pca_power", "embedding_quantize_int8",
-    "envelope_body_roundtrip", "events_dow_hour_heatmap",
+    # r11-stale (latest verdict is r11) at r16
+    "dedup_chunk_cdc", "dedup_minhash_recall", "events_dow_hour_heatmap",
     "events_holt_daily", "events_json_props", "events_sessionize_30m",
     "events_sliding_10m_5m", "events_window_hourly_by_type",
     "knn_cosine_topk", "multimodal_decode_features",
@@ -102,6 +99,10 @@ _FIRST_50 = (
     "agg_cube_lineitem",
     # r16-touched (posting/pair machinery rework; percentile fan-out)
     "dedup_containment", "dedup_cross_source", "agg_percentiles",
+    # single-query session caches moved to per-query checkpoints
+    "events_mad_anomaly", "events_interval_join_binned",
+    "streaming_cms_topk_twin", "text_domain_divergence",
+    "mixture_sqrt_temperature", "ann_pq_kmeans_recall",
 )
 
 

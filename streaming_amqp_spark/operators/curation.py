@@ -182,18 +182,18 @@ def contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership test on the tiny eval-doc-id set, not a property the band
     rows must be joined with ``documents`` to learn — a broadcast
     semi/anti join against the eval ids replaces the two corpus-grain
-    ``sh ⋈ src`` shuffle joins, and the band table itself comes from the
-    session-cached ``_shared_band_rows`` relation (the SAME banding
-    definition the LSH family uses), so the 16-hash signature fold runs
-    once per session instead of twice per query.  The verification sides
+    ``sh ⋈ src`` shuffle joins, and the band table (``band_rows_of``,
+    the SAME banding definition the LSH family uses) is materialized
+    once per query, so the 16-hash signature fold runs once instead of
+    once per eval/train branch.  The verification sides
     read the cached shingle index directly: the old ``src`` join there
     carried a column the query never used, at the cost of a doc-grain
     shuffle join per side (1:1 inner join on a key guaranteed present —
     row set unchanged)."""
     from streaming_amqp_spark.operators.dedup import (
         JACCARD_THRESHOLD,
-        _shared_band_rows,
         _shared_shingles,
+        band_rows_of,
     )
 
     shingles = _shared_shingles(spark, sf_dir)
@@ -214,7 +214,7 @@ def contamination_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("source").isNull() | (F.col("source") == EVAL_SOURCE))
         .select("doc_id")
     )
-    band_rows = _shared_band_rows(spark, sf_dir)
+    band_rows = band_rows_of(shingles).localCheckpoint(eager=False)
     # the eval slice is bounded (benchmarks ≪ corpus): broadcast its ids;
     # train band rows stream map-side through the anti join — no shuffle
     ev = band_rows.join(F.broadcast(eval_ids), "doc_id").select(
@@ -788,34 +788,30 @@ def text_domain_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE corpus scan builds the (source, term) count table
     (map-side combined, vocab×sources keys); everything after operates
-    on the tiny smoothed grid (|sources|·|vocab| rows, session-cached —
-    the a/b sides and the self-entropy would otherwise each re-derive
-    the corpus scan) and the |sources|² output."""
-    from streaming_amqp_spark.tables import shared_cache
-
-    def _grid() -> DataFrame:
-        ex = _docs(spark, sf_dir).select(
-            "source", F.explode(tokens()).alias("term")
+    on the tiny smoothed grid (|sources|·|vocab| rows, materialized once
+    per query — the a/b sides would otherwise each re-derive the corpus
+    scan) and the |sources|² output."""
+    ex = _docs(spark, sf_dir).select(
+        "source", F.explode(tokens()).alias("term")
+    )
+    cnt = ex.groupBy("source", "term").agg(F.count("*").alias("c"))
+    totals = ex.groupBy("source").agg(F.count("*").alias("n"))
+    vocab = ex.select("term").distinct()
+    vsize = vocab.agg(F.count("*").alias("v"))
+    grid = (
+        totals.crossJoin(F.broadcast(vocab))
+        .join(cnt, ["source", "term"], "left")
+        .crossJoin(F.broadcast(vsize))
+        .select(
+            "source",
+            "term",
+            (
+                (F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double")
+                / (F.col("n") + F.col("v")).cast("double")
+            ).alias("p"),
         )
-        cnt = ex.groupBy("source", "term").agg(F.count("*").alias("c"))
-        totals = ex.groupBy("source").agg(F.count("*").alias("n"))
-        vocab = ex.select("term").distinct()
-        vsize = vocab.agg(F.count("*").alias("v"))
-        return (
-            totals.crossJoin(F.broadcast(vocab))
-            .join(cnt, ["source", "term"], "left")
-            .crossJoin(F.broadcast(vsize))
-            .select(
-                "source",
-                "term",
-                (
-                    (F.coalesce(F.col("c"), F.lit(0)) + 1).cast("double")
-                    / (F.col("n") + F.col("v")).cast("double")
-                ).alias("p"),
-            )
-        )
-
-    grid = shared_cache(spark, ("domain_grid", sf_dir), _grid)
+        .localCheckpoint(eager=False)
+    )
     a = grid.select(
         F.col("source").alias("source_a"), "term", F.col("p").alias("pa")
     )
@@ -1280,19 +1276,17 @@ def mixture_sqrt_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one per-source aggregate (|sources| rows) and two broadcast
     scalars — the corpus is scanned once.  The |sources|-row aggregate
-    is cached: tot, scored and denom all reference it, and without the
-    cache each branch re-derives it from raw documents (4 corpus scans,
-    review-caught)."""
-    from streaming_amqp_spark.tables import shared_cache
-
-    d = _docs(spark, sf_dir)
-    per_src = shared_cache(
-        spark,
-        ("sqrt_temp_per_src", sf_dir),
-        lambda: d.groupBy("source").agg(
+    is materialized once per query: tot, scored and denom all reference
+    it, and without that each branch re-derives it from raw documents
+    (4 corpus scans, review-caught)."""
+    per_src = (
+        _docs(spark, sf_dir)
+        .groupBy("source")
+        .agg(
             F.count("*").alias("n_docs"),
             F.sum(F.size(tokens()).cast("long")).alias("src_tokens"),
-        ),
+        )
+        .localCheckpoint(eager=False)
     )
     tot = per_src.agg(F.sum("src_tokens").alias("total_tokens"))
     p = F.col("src_tokens").cast("double") / F.col("total_tokens").cast(

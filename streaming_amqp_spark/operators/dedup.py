@@ -110,7 +110,6 @@ def dedup_ngram_jaccard(
     spark: SparkSession,
     sf_dir: str,
     max_shingle_freq: int | None = MAX_SHINGLE_FREQ,
-    sh: DataFrame | None = None,
     id_cap: int | None = None,
     doc_attrs: DataFrame | None = None,
 ) -> DataFrame:
@@ -127,15 +126,15 @@ def dedup_ngram_jaccard(
     capped space re-aggregate the surviving lists, and candidate pairs
     explode each list's (i < j) combinations — bounded at cap² rows per
     shingle, and df=1 shingles (most of the index) never enter the pair
-    stage at all.  The posting table is cached because both the sizes
-    and pairs branches consume it.
+    stage at all.  The posting table is materialized once because both
+    the sizes and pairs branches consume it (see ``_posting_pair_stats``).
 
     ``doc_attrs`` (doc-grain ``(doc_id, attr...)``) rides the sizes
     joins: each attr comes back suffixed ``1``/``2`` per pair side — a
     consumer that needs per-doc labels gets them WITHOUT re-joining the
     pair set to the corpus (r15: dedup_cross_source's two pair-grain
     label shuffles fold into the doc-grain sizes lookup)."""
-    stats = _posting_pair_stats(spark, sf_dir, max_shingle_freq, sh, id_cap, doc_attrs)
+    stats = _posting_pair_stats(spark, sf_dir, max_shingle_freq, id_cap, doc_attrs)
     jac = F.col("inter").cast("double") / (
         F.col("n1") + F.col("n2") - F.col("inter")
     )
@@ -153,25 +152,26 @@ def _posting_pair_stats(
     spark: SparkSession,
     sf_dir: str,
     max_shingle_freq: int | None = MAX_SHINGLE_FREQ,
-    sh: DataFrame | None = None,
     id_cap: int | None = None,
     doc_attrs: DataFrame | None = None,
 ) -> DataFrame:
     """Shared pair machinery behind Jaccard and containment dedup:
     (id1, id2, inter, n1, n2) for every doc pair sharing ≥1 surviving
-    shingle.  One shuffle builds the posting lists (cached — both the
-    sizes and pairs branches consume it, and every similarity measure
-    over the same index reuses it); the pair expansion is bounded at
-    max_shingle_freq² rows per shingle.
+    shingle.  One shuffle builds the posting lists; the pair expansion
+    is bounded at max_shingle_freq² rows per shingle.
+
+    The posting index, the doc-grain sizes and the aggregated candidate
+    pairs are session artifacts of the corpus: jaccard, containment and
+    cross_source all read them (``doc_attrs`` only decorates the sizes
+    side).  An ``id_cap`` sample (the recall truth side) is read by one
+    query, so its posting and sizes are materialized once per query.
 
     ``doc_attrs`` joins doc-grain attributes onto the sizes relation —
     the aggregate's hash(doc_id) output partitioning is reused, so only
     the attr side shuffles (doc-grain, never the pair set); every doc_id
     in sizes exists in the corpus, so the inner lookup drops nothing.
     Attr columns surface suffixed ``1``/``2`` alongside n1/n2."""
-    registered_corpus = sh is None
-    if sh is None:
-        sh = _doc_shingles(spark, sf_dir)
+    sh = _doc_shingles(spark, sf_dir)
     if id_cap is not None:
         sh = sh.where(F.col("doc_id") < id_cap)
     ex = sh.select("doc_id", F.explode("shingles").alias("s"))
@@ -183,42 +183,16 @@ def _posting_pair_stats(
             p = p.where(F.size("ids") <= max_shingle_freq)
         return p
 
-    posting = shared_cache(
-        spark, ("jaccard_posting", sf_dir, max_shingle_freq, id_cap), _build_posting
-    )
-
-    # r16 (no-DAG-CSE re-expansion class, r15 §15): the doc-grain sizes
-    # aggregate is referenced by BOTH pair sides (s1 and s2 below), so
-    # the posting explode + groupBy(doc_id) + its exchange ran twice per
-    # query.  Session-cache it for the registered corpus (same key
-    # discipline as the posting cache; the slope panel clears it per
-    # cold iteration); caller-supplied shingle relations have no stable
-    # cache key — a lazy localCheckpoint computes the narrow (doc_id, n)
-    # relation once per invocation instead (query-scoped, doc-grain).
-    def _build_sizes() -> DataFrame:
+    # the doc-grain sizes aggregate is referenced by BOTH pair sides (s1
+    # and s2 below); without reuse the posting explode + groupBy(doc_id)
+    # + its exchange would run twice per query
+    def _build_sizes(posting: DataFrame) -> DataFrame:
         return (
             posting.select(F.explode("ids").alias("doc_id"))
             .groupBy("doc_id")
             .agg(F.count("*").alias("n"))
         )
 
-    if registered_corpus:
-        sizes = shared_cache(
-            spark, ("jaccard_sizes", sf_dir, max_shingle_freq, id_cap), _build_sizes
-        )
-    else:
-        sizes = _build_sizes().localCheckpoint(eager=False)
-    attrs: list[str] = []
-    if doc_attrs is not None:
-        attrs = [c for c in doc_attrs.columns if c != "doc_id"]
-        # doc-grain ⋈ doc-grain on the aggregate's own hash(doc_id)
-        # partitioning: only doc_attrs moves; shuffle-hash pinned for
-        # the same r9 estimate-driven-broadcast reason as s1/s2 below.
-        # Checkpointed lazily so the s1/s2 re-references below don't run
-        # the attr lookup twice (the base sizes cache cannot key on a
-        # caller-supplied DataFrame).
-        sizes = sizes.join(doc_attrs.hint("shuffle_hash"), "doc_id")
-        sizes = sizes.localCheckpoint(eager=False)
     # r16 (guide §2.4 share one exchange): the pair aggregate used to
     # exchange on (id1, id2) and the s1 join then re-exchanged the
     # aggregated pairs on id1.  hash(id1) satisfies the aggregate's
@@ -233,7 +207,7 @@ def _posting_pair_stats(
     # note: hash(id1) concentrates a hot doc's pairs, but per-doc pair
     # fan-out is cap-bounded (MAX_SHINGLE_FREQ per shingle) and the
     # id1 < id2 orientation splits a hot doc across both roles.
-    def _build_pairs() -> DataFrame:
+    def _build_pairs(posting: DataFrame) -> DataFrame:
         return (
             posting.where(F.size("ids") >= 2)
             .select(F.explode("ids").alias("id1"), F.col("ids"))
@@ -248,20 +222,35 @@ def _posting_pair_stats(
             .agg(F.count("*").alias("inter"))
         )
 
-    # r16: the aggregated (id1, id2, inter) candidate set is IDENTICAL
-    # across every consumer of this machinery (jaccard, containment,
-    # cross_source — doc_attrs only decorates the sizes side), so the
-    # registered corpus session-caches it like the posting index it
-    # derives from (cap-bounded pair grain; the slope panel's cold
-    # iterations clear it, so scaling figures still pay the build).
-    if registered_corpus:
+    if id_cap is None:
+        posting = shared_cache(
+            spark, ("jaccard_posting", sf_dir, max_shingle_freq), _build_posting
+        )
+        sizes = shared_cache(
+            spark,
+            ("jaccard_sizes", sf_dir, max_shingle_freq),
+            lambda: _build_sizes(posting),
+        )
         pairs = shared_cache(
             spark,
-            ("jaccard_pairs", sf_dir, max_shingle_freq, id_cap),
-            _build_pairs,
+            ("jaccard_pairs", sf_dir, max_shingle_freq),
+            lambda: _build_pairs(posting),
         )
     else:
-        pairs = _build_pairs()
+        posting = _build_posting().localCheckpoint(eager=False)
+        sizes = _build_sizes(posting).localCheckpoint(eager=False)
+        pairs = _build_pairs(posting)
+    attrs: list[str] = []
+    if doc_attrs is not None:
+        attrs = [c for c in doc_attrs.columns if c != "doc_id"]
+        # doc-grain ⋈ doc-grain on the aggregate's own hash(doc_id)
+        # partitioning: only doc_attrs moves; shuffle-hash pinned for
+        # the same r9 estimate-driven-broadcast reason as s1/s2 below.
+        # Checkpointed lazily so the s1/s2 re-references below don't run
+        # the attr lookup twice (a session artifact never keys on a
+        # caller-supplied DataFrame).
+        sizes = sizes.join(doc_attrs.hint("shuffle_hash"), "doc_id")
+        sizes = sizes.localCheckpoint(eager=False)
     s1 = sizes.select(
         F.col("doc_id").alias("id1"),
         F.col("n").alias("n1"),
@@ -433,39 +422,25 @@ def annotate_band_stats(band_rows: DataFrame) -> DataFrame:
     return band_rows.join(stats.hint("shuffle_hash"), ["band_idx", "band_hash"])
 
 
-def _band_stats_rows(sh: DataFrame) -> DataFrame:
-    return annotate_band_stats(band_rows_of(sh))
-
-
-def _shared_band_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared cached copy of the PLAIN band rows (doc_id,
-    band_idx, band_hash) — a pure projection over the cached shingle
-    index (the 16-hash signature fold is the expensive part; there is no
-    shuffle in the build).  Consumers that branch the band table more
-    than once (contamination_fuzzy's eval/train split) read this instead
-    of re-running the signature fold per branch."""
-    return shared_cache(
-        spark,
-        ("band_rows", sf_dir),
-        lambda: band_rows_of(_shared_shingles(spark, sf_dir)),
-    )
-
-
 def _shared_band_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared cached copy of ``_band_stats_rows`` over the shared
-    shingle index — the LSH candidate phase references this relation
-    several times (cold self-join twice + the hot star branch)."""
+    """Session-shared band rows annotated with bucket stats, over the
+    shared shingle index.  The LSH candidate phase references this
+    relation several times (cold self-join twice + the hot star branch);
+    without it Catalyst re-derives the minhash/band projection once per
+    reference (a measured 4x regression at sf0.1).  It holds 4 narrow
+    rows per doc — far smaller than the shingle cache it derives from."""
     return shared_cache(
         spark,
         ("band_stats", sf_dir),
-        lambda: _band_stats_rows(_shared_shingles(spark, sf_dir)),
+        lambda: annotate_band_stats(
+            band_rows_of(_shared_shingles(spark, sf_dir))
+        ),
     )
 
 
 def dedup_minhash_lsh(
     spark: SparkSession,
     sf_dir: str,
-    sh: DataFrame | None = None,
     max_band_freq: int | None = MAX_BAND_FREQ,
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs: 16 min-hashes → 4 bands of 4 → bucket
@@ -476,26 +451,12 @@ def dedup_minhash_lsh(
     MAX_BAND_FREQ contribute hub-star pairs only (see above): the bucket
     stats aggregate is map-side combined so hot keys never concentrate
     raw rows, and the stats→rows equi-join is AQE-skew-splittable.
-
-    Passing a custom ``sh``: the banded+stats relation is only
-    session-cached when ``sh`` IS the ``_shared_shingles`` singleton; any
-    other relation gets its band projection re-derived once per
-    candidate-phase reference (4x — the regression the cache exists to
-    prevent), so pre-cache a custom ``sh`` before handing it in.
     """
-    if sh is None:
-        sh = _shared_shingles(spark, sf_dir)
-    if sh is _shared_shingles(spark, sf_dir):
-        # the session-shared shingle index → the session-shared banded
-        # relation.  Without this, Catalyst re-derives the minhash/band
-        # projection once per reference (stats + both self-join sides +
-        # the hot branch = 4 computations; a measured 4x regression at
-        # sf0.1).  The cache holds 4 narrow rows per doc — far smaller
-        # than the shingle cache it derives from.
-        br = _shared_band_stats(spark, sf_dir)
-    else:
-        br = _band_stats_rows(sh)
-    return minhash_pairs_from(sh, br, max_band_freq)
+    return minhash_pairs_from(
+        _shared_shingles(spark, sf_dir),
+        _shared_band_stats(spark, sf_dir),
+        max_band_freq,
+    )
 
 
 def minhash_pairs_from(
@@ -651,15 +612,13 @@ MAX_SIMHASH_FREQ = 8
 
 
 def _shared_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-shared cached (doc_id, simhash) relation — the capped
-    probe join references it six times and each uncached reference
-    re-runs the full documents scan + tokenize + fingerprint aggregation
-    (no CSE across a DataFrame DAG)."""
+    """The (doc_id, simhash) relation, materialized once per query — the
+    capped probe join references it four times and each re-derived
+    reference re-runs the full documents scan + tokenize + fingerprint
+    aggregation (no CSE across a DataFrame DAG)."""
     from streaming_amqp_spark.operators.textstats import text_simhash
 
-    return shared_cache(
-        spark, ("simhash", sf_dir), lambda: text_simhash(spark, sf_dir)
-    )
+    return text_simhash(spark, sf_dir).localCheckpoint(eager=False)
 
 
 def dedup_simhash_hamming1(
@@ -686,8 +645,9 @@ def dedup_simhash_hamming1(
     products; >1 GiB at the synthesized sf1).
 
     The per-doc simhash relation is referenced four times (probe side,
-    bucket stats, cold side + its stats join) — session-cached for the
-    same no-CSE reason as ``_shared_band_stats``.
+    bucket stats, cold side + its stats join) and the bucket stats twice
+    — each is materialized once per query for the same no-CSE reason as
+    ``_shared_band_stats``.
 
     r15 (guide §2.4, remove shuffles outright): the hamming distance is
     computed MAP-SIDE before the pair distinct.  The old shape re-joined
@@ -723,16 +683,12 @@ def dedup_simhash_hamming1(
     )
     # r16 (no-DAG-CSE re-expansion class): stats is referenced by BOTH
     # the cold-side join and the hot-star filter, so the bucket-grain
-    # aggregate over the cached simhash relation ran twice per query
+    # aggregate over the simhash relation ran twice per query
     # (Exchange(21) + Exchange(31) in plans/r16's before capture).
-    # Fingerprint-grain and independent of max_simhash_freq (the cap is
-    # applied downstream), so one session-cached relation serves both.
-    stats = shared_cache(
-        spark,
-        ("simhash_stats", sf_dir),
-        lambda: sim.groupBy("simhash").agg(
-            F.count("*").alias("bsz"), F.min("doc_id").alias("hub")
-        ),
+    stats = (
+        sim.groupBy("simhash")
+        .agg(F.count("*").alias("bsz"), F.min("doc_id").alias("hub"))
+        .localCheckpoint(eager=False)
     )
     cap = (
         F.lit(max_simhash_freq)
@@ -840,17 +796,17 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality itself is oracle-checked (the 4×4 banding predicts ≥ ~97%
     recall at jaccard 0.8: 1-(1-s^4)^4).
 
-    The shingle index is built once, cached, and shared by the exact and
-    LSH paths — recall would otherwise recompute the most expensive input
-    twice.  The exact truth side is bounded to doc_id < RECALL_TRUTH_ID_CAP
-    (mirrored in the oracle): recall is a fixed-sample measurement, so at
-    any corpus scale the quadratic-natured exact pass stays constant-size
-    while the LSH side under test runs over everything."""
-    sh = _shared_shingles(spark, sf_dir)
+    The LSH side under test runs over the whole corpus from the session
+    shingle index and band stats.  The exact truth side is bounded to
+    doc_id < RECALL_TRUTH_ID_CAP (mirrored in the oracle): recall is a
+    fixed-sample measurement, so at any corpus scale the
+    quadratic-natured exact pass stays constant-size; only this query
+    reads that sample, so its posting index is materialized once per
+    query, never session-cached."""
     truth = dedup_ngram_jaccard(
-        spark, sf_dir, sh=sh, id_cap=RECALL_TRUTH_ID_CAP
+        spark, sf_dir, id_cap=RECALL_TRUTH_ID_CAP
     ).select("id1", "id2")
-    found = dedup_minhash_lsh(spark, sf_dir, sh=sh).select(
+    found = dedup_minhash_lsh(spark, sf_dir).select(
         "id1", "id2", F.lit(1).alias("hit")
     )
     # count("hit") ≡ matched-row count (hit is non-null exactly on LSH

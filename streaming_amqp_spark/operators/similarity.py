@@ -1738,24 +1738,12 @@ def ann_pq_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside sampling noise).  Same ADC shape as ann_pq_adc:
     encoding is a pure scan against the broadcast codebook, the query
     distance table is broadcast, DECIMAL-exact distance sums,
-    (dist, neighbor_id) tie-breaks."""
+    (dist, neighbor_id) tie-breaks.  The code table is read once by the
+    ADC join, so the encode pass runs inside this plan with no
+    materialization of its own."""
     cb = _pq_trained(spark, sf_dir)
-    return pq_kmeans_recall_from(spark, sf_dir, cb, _pq_km_codes(spark, sf_dir))
-
-
-def _pq_km_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached trained-codebook code table for the registered
-    corpus (the _pq_fixed_enc_long discipline: the codes are what the
-    persisted index stores; one encode pass per corpus per session)."""
-    from streaming_amqp_spark.tables import shared_cache
-
-    return shared_cache(
-        spark,
-        ("pq_km_codes", sf_dir),
-        lambda: pq_codes_long(
-            _emb_wide(spark, sf_dir), _pq_trained(spark, sf_dir)
-        ),
-    )
+    enc = pq_codes_long(_emb_wide(spark, sf_dir), cb)
+    return pq_kmeans_recall_from(spark, sf_dir, cb, enc)
 
 
 def pq_codes_long(emb: DataFrame, cb: DataFrame) -> DataFrame:

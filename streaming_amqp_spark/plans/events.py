@@ -19,7 +19,7 @@ from streaming_amqp_spark.envelope import body_as, events_as_envelope
 from streaming_amqp_spark.functions.numeric import davg, dsum
 from streaming_amqp_spark.plans.scalars import CMS_D, _cms_hashes
 from streaming_amqp_spark.streaming.cms import CMS_TOPK_K
-from streaming_amqp_spark.tables import load_table, shared_cache
+from streaming_amqp_spark.tables import load_table
 
 
 def events_window_5s_max(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -485,9 +485,9 @@ def events_interval_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
       unpartitioned window, over #days rows, not #errors rows).
     Result is row-identical to a single global cumulative window."""
     ev = load_table(spark, sf_dir, "events")
-    marked = shared_cache(
-        spark, ("burst_marked", sf_dir), lambda: _burst_marked(spark, sf_dir)
-    )
+    # referenced by the day summary and the burst rollup: materialized
+    # once per query so the error scan and both day windows run once
+    marked = _burst_marked(spark, sf_dir).localCheckpoint(eager=False)
     # per-day burst-count prefix sums (runs over the tiny day summary)
     day_tot = marked.groupBy("day").agg(F.sum("new_burst").alias("nb"))
     w_days = W.orderBy("day").rowsBetween(W.unboundedPreceding, -1)
@@ -1573,18 +1573,18 @@ def streaming_cms_topk_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``test_continuous_cms_store_equals_batch_sketch`` ties this twin's
     numbers to the live store across a checkpoint restart.
 
-    Scale: one events scan → per-key aggregate (cached: the relation
-    feeds both the store build and the probe side); the store is
+    Scale: one events scan → per-key aggregate (materialized once per
+    query: the relation feeds both the store build and the probe side);
+    the store is
     CMS_D·CMS_W = 1024 rows broadcast; top-K is TakeOrderedAndProject.
     CMS linearity makes building cells from per-key counts bit-identical
     to counting rows into cells (agg_cms_heavy_hitters' argument)."""
-    exact = shared_cache(
-        spark,
-        ("streaming_cms_topk_exact", sf_dir),
-        lambda: load_table(spark, sf_dir, "events")
+    exact = (
+        load_table(spark, sf_dir, "events")
         .select(F.col("user_id").cast("string").alias("k"))
         .groupBy("k")
-        .agg(F.count("*").alias("true_cnt")),
+        .agg(F.count("*").alias("true_cnt"))
+        .localCheckpoint(eager=False)
     )
     probe = exact.select(
         "k", "true_cnt", F.explode(_cms_hashes(F.col("k"))).alias("p")

@@ -368,31 +368,27 @@ def events_mad_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     percentile passes (deviations need the median first) + one flagging
     pass — three scans, each shuffling only the 5-row per-type stats;
     medians come back broadcast so every pass over raw events is
-    map-side.  The 5-row med/mad relations are cached — every branch
-    that references them would otherwise re-derive them from raw events
-    and the plan balloons to 7 scans (review-caught).  (A one-scan
-    approximate twin would swap in ``percentile_approx`` sketches, the
-    agg_approx_stats pattern.)"""
-    from streaming_amqp_spark.tables import shared_cache
-
+    map-side.  The 5-row med/mad relations are materialized once per
+    query — every branch that references them would otherwise re-derive
+    them from raw events and the plan balloons to 7 scans
+    (review-caught).  (A one-scan approximate twin would swap in
+    ``percentile_approx`` sketches, the agg_approx_stats pattern.)"""
     ev = _t(spark, sf_dir, "events")
-    med = shared_cache(
-        spark,
-        ("mad_med", sf_dir),
-        lambda: ev.groupBy("event_type").agg(
+    med = (
+        ev.groupBy("event_type")
+        .agg(
             F.percentile("value", F.lit(0.5)).alias("median_value"),
             F.count("*").alias("n_events"),
-        ),
+        )
+        .localCheckpoint(eager=False)
     )
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type", F.abs(F.col("value") - F.col("median_value")).alias("d")
     )
-    mad = shared_cache(
-        spark,
-        ("mad_mad", sf_dir),
-        lambda: dev.groupBy("event_type").agg(
-            F.percentile("d", F.lit(0.5)).alias("mad_value")
-        ),
+    mad = (
+        dev.groupBy("event_type")
+        .agg(F.percentile("d", F.lit(0.5)).alias("mad_value"))
+        .localCheckpoint(eager=False)
     )
     stats = med.join(F.broadcast(mad), "event_type")
     flagged = (

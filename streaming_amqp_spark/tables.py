@@ -215,38 +215,35 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Upper bound on live shared_cache entries.  A single query tree touches
-# at most ~4 cached relations, so 12 never evicts within one query; what
-# it does bound is a long-lived session running MANY heavy operators over
-# large inputs, where cached relations otherwise accumulate without limit
-# (measured at the r8 100x probe: five dedup operators' sf1+sf10 caches
-# held ~1.2 GB of the 10 GB storage region in one JVM with nothing ever
-# unpersisting).  Eviction is semantics-neutral: a re-referenced evicted
-# relation recomputes (slower, never wrong).
-# r16: +2 over the original 12 — the pair-machinery rework added two
-# cache kinds (doc-grain sizes, aggregated candidate pairs) to the
-# dedup/curation stretch's working set; the cap bounds ENTRY COUNT (each
-# entry is itself bounded: cap-limited pair grain or doc-grain), so the
-# bump keeps that stretch resident without changing the memory envelope
-# class.
+# Upper bound on live shared_cache entries.  The package has 14 cache
+# kinds (tests/test_shared_cache.py counts them), and the registered
+# queries key each kind once per corpus, so one corpus's artifacts never
+# evict one another whatever order queries run in.  What the cap bounds
+# is a long-lived session over several corpora (sf_dirs), where entries
+# would otherwise accumulate without limit.
+# Eviction is semantics-neutral: a re-referenced evicted relation
+# recomputes (slower, never wrong).
 _SHARED_CACHE_CAP = 14
 
 
 def shared_cache(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Session-scoped LRU cache registry: at most ONE cached DataFrame
-    per (operator, input) key, reused across query invocations, at most
-    ``_SHARED_CACHE_CAP`` cached relations live per session.
+    """Session-scoped LRU registry of cached relations: at most ONE cached
+    DataFrame per key, reused across query invocations, at most
+    ``_SHARED_CACHE_CAP`` live per session.
+
+    Only a session artifact belongs here: a relation that at least two
+    registered queries read.  Its key is ``(kind, sf_dir)`` plus operator
+    constants, with ``kind`` a string literal; it never includes a
+    caller's DataFrame or a per-query bound.  A subplan that only one
+    query references more than once is materialized once per query with
+    ``localCheckpoint(eager=False)`` instead, and a subplan referenced
+    once gets no materialization at all.
 
     A bare ``.cache()`` inside an operator pins a NEW InMemoryRelation in
     the session's storage memory on every call and nothing ever
-    unpersists it — after N invocations (the driver harness runs ~100
-    queries; bench re-runs them) N stale copies compete with
-    shuffle/execution memory.  Keying the cache on the session object
-    bounds entries to the distinct (operator, sf_dir) pairs actually
-    used; the LRU cap + unpersist bounds TOTAL session storage when many
-    heavy (operator, sf_dir) pairs run through one long-lived session.
-    Callers that mutate inputs in place must clear
-    ``spark._saq_shared_cache``.
+    unpersists it; keying the cache on the session bounds entries to the
+    distinct keys actually used.  Callers that mutate inputs in place
+    must call ``clear_shared_cache``.
     """
     from collections import OrderedDict
 

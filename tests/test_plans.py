@@ -148,7 +148,7 @@ def test_burst_detection_windows_are_day_sharded(spark, sf_dir):
     unpartitioned window allowed is the day-offset prefix sum, which runs
     over the per-day aggregate (#days rows, not #errors rows).
 
-    The marked subtree sits behind a shared cache in the full query, so
+    The marked subtree sits behind a checkpoint in the full query, so
     its windows are asserted on the subtree's own plan; the full query's
     plan is checked for any further unpartitioned windows."""
     from streaming_amqp_spark.plans.events import _burst_marked
@@ -294,18 +294,34 @@ def test_rolling_dau_has_no_nested_loop_join(spark, sf_dir):
 
 def test_tiny_aggregate_reuse_is_cached(spark, sf_dir):
     """Operators whose docstrings promise a bounded number of corpus
-    scans must actually cache the tiny aggregates every branch
-    re-references — without the cache Catalyst re-derives them from the
-    raw table per branch (7 scans for MAD, 4 for the mixture — caught
-    in review)."""
-    for name in (
-        "events_mad_anomaly",
-        "mixture_sqrt_temperature",
-        "text_scrub_dup_chunks",
-    ):
+    scans must actually materialize the tiny aggregates every branch
+    re-references — without that Catalyst re-derives them from the raw
+    table per branch (7 scans for MAD, 4 for the mixture — caught in
+    review).  MAD and the mixture are one query each, so their
+    aggregates are per-query checkpoints read at every reference; the
+    scrub chunks are a session cache."""
+    import re
+
+    # query -> {checkpointed relation's columns: references in the plan}
+    checkpointed = {
+        "events_mad_anomaly": {
+            "event_type,median_value,n_events": 2,
+            "event_type,mad_value": 2,
+        },
+        "mixture_sqrt_temperature": {"source,n_docs,src_tokens": 4},
+    }
+    for name, relations in checkpointed.items():
         df = _QUERIES[name](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, f"{name} lost its cache"
+        scans = [
+            re.sub(r"#\d+L?", "", cols)
+            for cols in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", plan)
+        ]
+        for cols, n in relations.items():
+            assert scans.count(cols) == n, f"{name} lost {cols}: {plan[:900]}"
+    df = _QUERIES["text_scrub_dup_chunks"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" in plan, "text_scrub_dup_chunks lost its cache"
 
 
 def test_minhash_band_relation_is_cached(spark, sf_dir):
@@ -331,16 +347,23 @@ def test_minhash_band_relation_is_cached(spark, sf_dir):
 def test_simhash_relation_is_cached(spark, sf_dir):
     """dedup_simhash_hamming1 references the per-doc simhash relation four
     times (probe side, bucket stats, cold side + stats join — the two
-    hamming lookups were folded into the pair phase in r15); the
-    `_shared_simhash` session cache must serve every reference or each
-    one re-runs the full documents scan + fingerprint aggregation
-    (review-caught in r7)."""
+    hamming lookups were folded into the pair phase in r15) and the
+    bucket stats twice; `_shared_simhash` and the stats are materialized
+    once per query and must serve every reference, or each one re-runs
+    the full documents scan + fingerprint aggregation (review-caught in
+    r7).  The stats are aggregated inside their own checkpoint, so the
+    plan reads the per-doc relation twice and the stats twice, and never
+    scans the corpus."""
     import re
 
     df = _QUERIES["dedup_simhash_hamming1"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    sim_scans = re.findall(r"InMemoryTableScan \[[^\]]*\bsimhash\b", plan)
-    assert len(sim_scans) >= 4, plan[:900]
+    doc_scans = re.findall(r"Scan ExistingRDD\[doc_id#\d+L?,simhash#\d+\]", plan)
+    stats_scans = re.findall(
+        r"Scan ExistingRDD\[simhash#\d+,bsz#\d+L?,hub#\d+L?\]", plan
+    )
+    assert len(doc_scans) == 2 and len(stats_scans) == 2, plan[:900]
+    assert "FileScan" not in plan, plan[:900]
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -521,12 +544,19 @@ def test_cms_topk_is_broadcast_take_ordered(spark, sf_dir):
     """streaming_cms_topk_twin's scale claims: the 1024-cell store joins
     as a BROADCAST (never shuffles the probe side on (r, b)), top-K plans
     as TakeOrderedAndProject (no global sort), and the per-key aggregate
-    is cached so the store build and the probe ride ONE events scan."""
+    is materialized once per query so the store build and the probe
+    both read it and ride ONE events scan."""
+    import re
+
     plan = _plan(spark, sf_dir, "streaming_cms_topk_twin")
     assert "BroadcastHashJoin" in plan, plan[:900]
     assert "TakeOrderedAndProject" in plan, plan[:900]
     assert "Exchange rangepartitioning" not in plan
-    assert "InMemoryTableScan" in plan, plan[:900]
+    df = _QUERIES["streaming_cms_topk_twin"](spark, sf_dir)
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    exact_scans = re.findall(r"Scan ExistingRDD\[k#\d+,true_cnt#\d+L?\]", executed)
+    assert len(exact_scans) == 2, executed[:900]
+    assert "FileScan" not in executed, executed[:900]
 
 
 def test_scd_asof_is_one_window_no_range_join(spark, sf_dir):
