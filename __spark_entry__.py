@@ -84,9 +84,7 @@ _FIRST_50 = (
     "events_funnel", "rfm_segmentation", "orders_backlog_sweepline",
     "q1_pricing_summary", "ann_pq_adc", "dedup_ngram_jaccard",
     # r11-stale (latest verdict is r11) at r16
-    "dedup_chunk_cdc", "dedup_minhash_recall", "events_dow_hour_heatmap",
-    "events_holt_daily", "events_json_props", "events_sessionize_30m",
-    "events_sliding_10m_5m", "events_window_hourly_by_type",
+    "dedup_chunk_cdc", "dedup_minhash_recall", "events_sessionize_30m",
     "knn_cosine_topk", "multimodal_decode_features",
     "multimodal_frame_sample", "multimodal_meta", "multimodal_resize",
     "pack_docs_nextfit", "pii_mask_events", "profile_table",
@@ -103,6 +101,9 @@ _FIRST_50 = (
     "events_mad_anomaly", "events_interval_join_binned",
     "streaming_cms_topk_twin", "text_domain_divergence",
     "mixture_sqrt_temperature", "ann_pq_kmeans_recall",
+    # guard moved into fan_out (narrow-scan repartition only)
+    "basket_brand_pairs", "brand_graph_pagerank", "text_repetition_stats",
+    "contamination_check", "curate_documents",
 )
 
 

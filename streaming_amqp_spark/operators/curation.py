@@ -335,17 +335,9 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-document repetition quality signals: duplicate positional
     3-gram fraction (boilerplate / copy-paste detector) and most-frequent-
     token share.  Pure per-row expressions over one bound token array —
-    no shuffle, fuses into the scan.
-
-    r15: fans out when the scan is narrower than the session — the
-    sf0.1 one-row-group documents file ran this heavy HOF projection
-    single-task; the width guard keeps 100 TB scan-only (no exchange
-    added at scale)."""
-    from streaming_amqp_spark.tables import fan_out_if_narrow
-
-    d = fan_out_if_narrow(
-        _docs(spark, sf_dir), "doc_id", width_key=("documents", sf_dir)
-    )
+    no shuffle, fuses into the scan; ``fan_out`` spreads the heavy HOF
+    projection when the scan is narrower than the cores."""
+    d = fan_out(_docs(spark, sf_dir), "doc_id")
 
     def stats_of(t):
         n = F.size(t)

@@ -24,7 +24,7 @@ from pyspark.sql import Window as W
 
 from streaming_amqp_spark.functions.vectors import cosine, dot, sql_cosine
 from streaming_amqp_spark.tables import EMBEDDING_DIMS as DIMS
-from streaming_amqp_spark.tables import load_table
+from streaming_amqp_spark.tables import fan_out, load_table
 KNN_K = 5
 N_QUERIES = 8  # query set = vec_id < 8
 N_PLANES = 4
@@ -43,24 +43,16 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The embeddings scan, hash-fanned-out to session parallelism when
-    (and only when) the scan itself is narrower than the core count.
+    """The embeddings scan through ``tables.fan_out`` keyed on vec_id.
 
     Every expression-heavy corpus-side consumer (PQ encode, Lloyd
-    assignment, cosine scoring, LSH bucketing) reads through this: the
-    driver's one-row-group files otherwise pin those projections to ONE
-    task (measured r15: the PQ encode projection alone is ~0.95 s
-    single-task at sf0.1 vs ~0.1 s fanned out).  At real scale the scan
-    is already wide and this is a no-op — see
-    ``tables.fan_out_if_narrow``.  Filters on top (the ``vec_id <
-    N_QUERIES`` query side, codebook prefixes) still push down to the
-    parquet scan through the repartition, so small sides shuffle only
-    their surviving rows."""
-    from streaming_amqp_spark.tables import fan_out_if_narrow
-
-    return fan_out_if_narrow(
-        _emb(spark, sf_dir), "vec_id", width_key=("embeddings", sf_dir)
-    )
+    assignment, cosine scoring, LSH bucketing) reads through this: a
+    one-row-group file otherwise pins those projections to ONE task (the
+    PQ encode projection alone is ~0.95 s single-task at sf0.1 vs ~0.1 s
+    fanned out).  Filters on top (the ``vec_id < N_QUERIES`` query side,
+    codebook prefixes) still push down to the parquet scan through the
+    repartition, so small sides shuffle only their surviving rows."""
+    return fan_out(_emb(spark, sf_dir), "vec_id")
 
 
 def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ from streaming_amqp_spark.tables import fan_out, load_table
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-file input → fan out so md5-heavy projections use all cores
+    # a narrow scan fans out so md5-heavy projections use all cores
     return fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
 
 
@@ -272,13 +272,7 @@ def text_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is the term-count agg (map-side partial combine applies), and
     the corpus size joins in as a broadcast 1-row literal.  IDF is rounded
     to 4 decimals (the irrational-output convention, plans.relational
-    RATIO).
-
-    (r15: a fan_out_if_narrow wrapper was briefly committed here on a
-    min-of-4 A/B reading 1.11 -> 0.48 s — then found to be a PLAN NO-OP
-    (``_docs`` already hash-fans-out on doc_id; the width guard sees 32
-    partitions and passes through), so the reading was host noise.
-    Reverted; captured plans before/after are node-identical.)"""
+    RATIO)."""
     d = _docs(spark, sf_dir)
     n_docs = d.select(F.count("*").alias("n_docs"))
     df_ = (

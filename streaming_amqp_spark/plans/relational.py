@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from streaming_amqp_spark.functions.numeric import davg, dec, dsum
-from streaming_amqp_spark.tables import load_table
+from streaming_amqp_spark.tables import fan_out, load_table
 
 RATIO = 4  # decimals for genuinely-irrational outputs (log etc.)
 
@@ -55,22 +55,13 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r15: the 8-aggregate DECIMAL partial agg is the whole query; on a
-    # narrow scan (driver files: 3 row groups) it ran on 3 cores.  The
-    # adaptive fan-out spreads the partial agg and is a no-op once the
-    # scan is at least core-wide (measured: sf0.1 1.21->0.96 s, sf1
-    # already 32 splits -> unchanged; a FORCED repartition at sf1 was
-    # 1.19->1.53 s, which is why the width guard exists).  The shipdate
-    # filter still pushes down through the repartition.
-    from streaming_amqp_spark.tables import fan_out_if_narrow
-
-    # keyed on l_shipdate (a column the query already reads — keying on
-    # l_orderkey would widen ReadSchema; ~2.5k distinct dates spread fine)
-    li = fan_out_if_narrow(
-        _t(spark, sf_dir, "lineitem"),
-        "l_shipdate",
-        width_key=("lineitem", sf_dir),
-    )
+    # The 8-aggregate DECIMAL partial agg is the whole query; fan_out
+    # spreads it over the cores when the scan is narrower (sf0.1: 1.21 ->
+    # 0.96 s; a forced repartition of a core-wide sf1 scan was 1.19 ->
+    # 1.53 s).  Keyed on l_shipdate, a column the query already reads:
+    # keying on l_orderkey would widen ReadSchema, and ~2.5k distinct
+    # dates spread fine.  The shipdate filter still pushes down.
+    li = fan_out(_t(spark, sf_dir, "lineitem"), "l_shipdate")
     charge = _revenue_term() * (F.lit(1).cast("decimal(8,2)") + dec("l_tax"))
     return (
         li.where(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
@@ -1256,18 +1247,13 @@ def basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     |brands|² regardless of corpus size.  The part dimension broadcasts.
     Two exchanges total vs the textbook self-join's three-plus.
 
-    r15: the lineitem side fans out keyed on l_orderkey when the scan is
-    narrower than the session (the sf0.1 3-row-group file pinned the
-    broadcast join + collect_set partials to 3 tasks).  Keying on the
-    groupBy column means the repartition REPLACES the aggregate's own
-    exchange (hash(l_orderkey) satisfies the agg's clustering), so the
-    exchange count stays two; at real scale the guard is a no-op."""
-    from streaming_amqp_spark.tables import fan_out_if_narrow
-
-    li = fan_out_if_narrow(
+    The lineitem side goes through ``fan_out`` keyed on the groupBy
+    column: on a narrow scan the repartition REPLACES the aggregate's
+    own exchange (hash(l_orderkey) satisfies the agg's clustering), so
+    the exchange count stays two."""
+    li = fan_out(
         _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"),
         "l_orderkey",
-        width_key=("lineitem", sf_dir),
     )
     part = _t(spark, sf_dir, "part")
     per_order = (
@@ -1332,16 +1318,13 @@ def brand_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-aggregated shuffle — the standard distributed PageRank
     shape, bounded by |edges| per iteration.
 
-    r15: same keyed fan-out as basket_brand_pairs — hash(l_orderkey) is
-    a subset of the distinct's (l_orderkey, p_brand) clustering AND the
+    Same keyed ``fan_out`` as basket_brand_pairs: hash(l_orderkey) is a
+    subset of the distinct's (l_orderkey, p_brand) clustering AND the
     collect_set's l_orderkey clustering, so the one narrow-scan
-    repartition replaces both downstream exchanges; no-op at scale."""
-    from streaming_amqp_spark.tables import fan_out_if_narrow
-
-    li = fan_out_if_narrow(
+    repartition replaces both downstream exchanges."""
+    li = fan_out(
         _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey"),
         "l_orderkey",
-        width_key=("lineitem", sf_dir),
     )
     part = _t(spark, sf_dir, "part")
     ob = (

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from streaming_amqp_spark.functions.numeric import dsum
-from streaming_amqp_spark.tables import load_table
+from streaming_amqp_spark.tables import fan_out, load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -194,24 +194,16 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's ``percentile`` and DuckDB's ``quantile_cont`` share the
     (p·(n−1)) linear-interpolation definition, so the doubles match
     bit-for-bit (verified empirically)."""
-    from streaming_amqp_spark.tables import fan_out_if_narrow
-
-    # r16 (guide §2.4 share one exchange + §2.6): on a narrow scan the
-    # exact-percentile partial aggregate built its per-group value
-    # multiset on ONE task and then shuffled the serialized multisets.
-    # Hash-repartitioning the (flag, price) projection by the GROUP KEY
-    # replaces the aggregate's own exchange (subset rule), so the heavy
-    # multiset state never crosses the wire at all — raw 10-byte rows
-    # do, once.  Measured 1.65 → 0.93 s isolated (controls steady); at
-    # 100 TB the width guard sees a wide scan and this is a no-op, so
-    # the scale plan (per-split partials, multiset exchange — the
-    # exactness contract's inherent cost) is unchanged.
-    li = fan_out_if_narrow(
-        _t(spark, sf_dir, "lineitem").select(
-            "l_returnflag", "l_extendedprice"
-        ),
+    # On a narrow scan the exact-percentile partial aggregate would build
+    # its per-group value multiset on ONE task and then shuffle the
+    # serialized multisets.  Fanning the (flag, price) projection out by
+    # the GROUP KEY replaces the aggregate's own exchange (subset rule),
+    # so the heavy multiset state never crosses the wire — raw 10-byte
+    # rows do, once (sf0.1: 1.65 → 0.93 s).  A wide scan keeps the scale
+    # plan: per-split partials, then the multiset exchange.
+    li = fan_out(
+        _t(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice"),
         "l_returnflag",
-        width_key=("lineitem_pctl", sf_dir),
     )
     pct = F.percentile("l_extendedprice", F.lit([0.25, 0.5, 0.75, 0.9, 0.99]))
     return li.groupBy("l_returnflag").agg(

@@ -386,15 +386,19 @@ class SpoolTransport(Transport):
     def replay(self, start: int, end: int) -> list[dict]:
         """Full-rescan slow path for offset-range replay after a restart
         (≡ WAL block re-read); leaves the incremental cursor and the
-        malformed counter untouched.  Stops after the file that brings the
-        count to ``end``."""
+        malformed counter untouched.  Files before ``start`` are parsed
+        only to count their messages; only the ``[start, end)`` messages
+        are kept.  Stops after the file that brings the count to ``end``."""
         out: list[dict] = []
+        seen = 0  # messages in the files already read
         for path in _spool_files(self.spool_dir):
-            with open(path, "rb") as f:
-                out += _parse_spool_lines(f.read(_complete_bytes(path)))[0]
-            if len(out) >= end:
+            if seen >= end:
                 break
-        return out[start:end]
+            with open(path, "rb") as f:
+                msgs = _parse_spool_lines(f.read(_complete_bytes(path)))[0]
+            out += msgs[max(start - seen, 0) : end - seen]
+            seen += len(msgs)
+        return out
 
 
 class QpidTransport(Transport):

@@ -278,70 +278,22 @@ def clear_shared_cache(spark: SparkSession) -> None:
         for df in reg.values():
             df.unpersist(blocking=False)
         reg.clear()
-    # ADVICE r15: the fan_out_if_narrow width memo is keyed on
-    # (table, sf_dir) with no invalidation of its own — every caller
-    # that mutates inputs in place already clears the shared cache, so
-    # dropping the memo here keeps a rewritten/appended parquet dir
-    # from serving a stale scan width.
-    memo = getattr(spark, "_saq_scan_width", None)
-    if memo:
-        memo.clear()
 
 
 def fan_out(df: DataFrame, *keys: str) -> DataFrame:
-    """Hash-repartition to the session's default parallelism.
+    """Hash-repartition by ``keys`` to the session's default parallelism
+    when, and only when, the scan is narrower than that.
 
-    The driver's small tables arrive as one parquet file = one partition;
-    compute-heavy per-row operators (shingling, 16-way minhash, simhash)
-    would otherwise run single-core.  The same holds at 100 TB whenever
-    file count < cores: pay one narrow shuffle of the (small) input to
-    unlock full-width CPU for the expensive projection.
+    A one-row-group parquet file scans as one task, so a compute-heavy
+    per-row projection (shingling, minhash, PQ encode) or a partial
+    aggregate over it would run single-core.  An input with at least as
+    many splits as cores already parallelizes, and ``df`` is returned
+    unchanged: no corpus shuffle is added at scale.  The width probe
+    (``getNumPartitions``) is driver-side physical planning; no job runs.
+    Filters on top still push down to the scan through the repartition.
     """
     n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *keys) if keys else df.repartition(n)
-
-
-def fan_out_if_narrow(
-    df: DataFrame, *keys: str, width_key: tuple | None = None
-) -> DataFrame:
-    """``fan_out`` only when the plan would actually scan NARROWER than
-    the session's parallelism (single-row-group / few-file inputs — the
-    driver's sf0.1 tables are one row group each, so every scan stage is
-    one task whatever maxPartitionBytes says).
-
-    Scale-adaptive by construction (guide §2.4: remove shuffles outright
-    where the data already parallelizes): at 100 TB the input has far
-    more splits than cores, the probe sees a wide scan, and this returns
-    ``df`` unchanged — no corpus shuffle is ever added at scale.  The
-    repartition fires exactly in the regime where it pays: an
-    expression-heavy projection (PQ encode, Lloyd assignment, cosine
-    scoring) over an input whose file count < cores would otherwise run
-    single-task while the rest of the machine idles.
-
-    The width probe (``df.rdd.getNumPartitions()``) is driver-side
-    physical planning only — no job runs, no data moves; ``width_key``
-    memoizes it per session (the probe costs ~10-40 ms of plan
-    conversion, paid once per (table, sf_dir)).  The memo assumes the
-    probed width is PROJECTION-INSENSITIVE (true for row-group-split
-    parquet scans: split count depends on file bytes, not the column
-    subset) and is invalidated alongside the shared cache
-    (``clear_shared_cache``) whenever a caller mutates inputs in
-    place (ADVICE r15)."""
-    spark = df.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    width = None
-    memo: dict | None = None
-    if width_key is not None:
-        memo = getattr(spark, "_saq_scan_width", None)
-        if memo is None:
-            memo = {}
-            spark._saq_scan_width = memo
-        width = memo.get(width_key)
-    if width is None:
-        width = df.rdd.getNumPartitions()
-        if memo is not None:
-            memo[width_key] = width
-    return df.repartition(n, *keys) if width < n else df
+    return df if df.rdd.getNumPartitions() >= n else df.repartition(n, *keys)
 
 
 def load_tables(

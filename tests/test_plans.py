@@ -5,18 +5,38 @@ here long before it shows up as a 100 TB incident."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
+
 import __spark_entry__ as entrymod
 
 _QUERIES = entrymod.queries()
 
 
-def _plan(spark, sf_dir, name) -> str:
-    df = _QUERIES[name](spark, sf_dir)
+def _df_plan(df) -> str:
     return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"
         )
     )
+
+
+def _plan(spark, sf_dir, name) -> str:
+    return _df_plan(_QUERIES[name](spark, sf_dir))
+
+
+def _hash_exchange_keys(plan: str, mode: str = "[A-Z_]+") -> list[str]:
+    """Keys of every hashpartitioning exchange whose shuffle origin
+    matches ``mode``, expression ids and the partition count stripped."""
+    keys = []
+    pat = rf"Arguments: hashpartitioning\(([^)]*)\), {mode},"
+    for m in re.findall(pat, plan):
+        args = re.sub(r"#\d+L?", "", m).split(", ")
+        if args[-1].isdigit():  # the partition count, not a key
+            args.pop()
+        keys.append(", ".join(args))
+    return keys
 
 
 def test_q1_filter_pushdown_and_pruning(spark, sf_dir):
@@ -245,9 +265,9 @@ def test_pq_adc_encoding_is_map_side(spark, sf_dir):
     """PQ: codebook and query distance table broadcast; corpus encoding
     is a pure projection over the (conditionally fanned-out) scan.  The
     data-bearing shuffles are bounded by three hashpartitioning
-    exchanges: the r15 narrow-input fan-out feeding the encode (fires
+    exchanges: the narrow-input fan-out feeding the encode (fires
     only when scan splits < cores — a no-op at real scale, see
-    tables.fan_out_if_narrow), the (query, vector) distance sum (with
+    tables.fan_out), the (query, vector) distance sum (with
     map-side partial agg), and the per-query top-k window — which must
     carry the WindowGroupLimit pushdown so executors emit k rows, not
     all N."""
@@ -256,15 +276,7 @@ def test_pq_adc_encoding_is_map_side(spark, sf_dir):
     # ADVICE r15: pin the KEYS of every exchange, not just a count — a
     # regression that swapped the map-side partial-agg shape for a
     # different 3-exchange plan used to pass the <=3 check.
-    import re
-
-    keys = []
-    for m in re.findall(r"Arguments: hashpartitioning\(([^)]*)\), [A-Z_]+", plan):
-        args = re.sub(r"#\d+L?", "", m).split(", ")
-        if args[-1].isdigit():  # the partition count, not a key
-            args.pop()
-        keys.append(", ".join(args))
-    keys.sort()
+    keys = sorted(_hash_exchange_keys(plan))
     fanned = "REPARTITION_BY_NUM" in plan
     expected = sorted(
         (["vec_id"] if fanned else []) + ["query_id, vec_id", "query_id"]
@@ -300,8 +312,6 @@ def test_tiny_aggregate_reuse_is_cached(spark, sf_dir):
     review).  MAD and the mixture are one query each, so their
     aggregates are per-query checkpoints read at every reference; the
     scrub chunks are a session cache."""
-    import re
-
     # query -> {checkpointed relation's columns: references in the plan}
     checkpointed = {
         "events_mad_anomaly": {
@@ -334,8 +344,6 @@ def test_minhash_band_relation_is_cached(spark, sf_dir):
     satisfied by the shingle cache alone, which the pre-fix plan already
     read 4x; review-caught) at all three candidate-phase references, and
     never fall back to a cartesian candidate phase."""
-    import re
-
     df = _QUERIES["dedup_minhash_lsh"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     stats_scans = re.findall(r"InMemoryTableScan \[[^\]]*\bbsz\b", plan)
@@ -354,8 +362,6 @@ def test_simhash_relation_is_cached(spark, sf_dir):
     r7).  The stats are aggregated inside their own checkpoint, so the
     plan reads the per-doc relation twice and the stats twice, and never
     scans the corpus."""
-    import re
-
     df = _QUERIES["dedup_simhash_hamming1"](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     doc_scans = re.findall(r"Scan ExistingRDD\[doc_id#\d+L?,simhash#\d+\]", plan)
@@ -402,8 +408,6 @@ _GLOBAL_WINDOW_ALLOWLIST = (
 
 
 def _window_nodes(plan: str):
-    import re
-
     for line in plan.splitlines():
         s = line.strip().lstrip(":+- ").lstrip("*(0123456789) ")
         if not s.startswith("Window ["):
@@ -503,8 +507,6 @@ def test_profile_table_plan_shape(spark, sf_dir):
     assert "Expand" not in plan, plan[:800]
     assert "Sort [" not in plan, plan[:800]
     # whole-table pass: codegen HashAggregate, never SortAggregate
-    import re
-
     whole_table = [
         ln
         for ln in plan.splitlines()
@@ -546,8 +548,6 @@ def test_cms_topk_is_broadcast_take_ordered(spark, sf_dir):
     as TakeOrderedAndProject (no global sort), and the per-key aggregate
     is materialized once per query so the store build and the probe
     both read it and ride ONE events scan."""
-    import re
-
     plan = _plan(spark, sf_dir, "streaming_cms_topk_twin")
     assert "BroadcastHashJoin" in plan, plan[:900]
     assert "TakeOrderedAndProject" in plan, plan[:900]
@@ -564,8 +564,6 @@ def test_scd_asof_is_one_window_no_range_join(spark, sf_dir):
     Window node (custkey-partitioned), no nested-loop/cartesian interval
     join, and the only wide exchanges are the orderkey equi-join and the
     custkey sweep."""
-    import re
-
     plan = _plan(spark, sf_dir, "scd_priority_asof")
     # formatted explain prints each node twice (tree + detail section):
     # count the numbered detail entries
@@ -679,3 +677,63 @@ def test_clear_shared_cache_unpersists_and_rebuilds(spark):
         clear_shared_cache(spark)
     finally:
         spark._saq_shared_cache = saved
+
+
+# ---------------------------------------------------------------- fan_out
+# tables.fan_out repartitions to the session's parallelism only when the
+# scan is narrower than that.  Every shipped parquet file is one row
+# group (one split), so the wide side needs a rewritten copy.
+_FAN_OUT = "REPARTITION_BY_NUM"  # the exchange a repartition(n, keys) plans
+
+
+@pytest.fixture(scope="module")
+def wide_sf_dir(tmp_path_factory, sf_dir):
+    """lineitem and documents of ``sf_dir``, each rewritten as 8 parquet
+    files: a scan of 8 splits, at least as wide as the test session."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path_factory.mktemp("wide_sf")
+    for name in ("lineitem", "documents"):
+        t = pq.read_table(f"{sf_dir}/{name}.parquet")
+        d = out / f"{name}.parquet"
+        d.mkdir()
+        step = -(-t.num_rows // 8)
+        for i in range(8):
+            pq.write_table(t.slice(i * step, step), d / f"part-{i}.parquet")
+    return str(out)
+
+
+def test_fan_out_repartitions_a_narrow_scan_once(spark, sf_dir):
+    from streaming_amqp_spark.tables import fan_out, load_table
+
+    li = load_table(spark, sf_dir, "lineitem")
+    assert li.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    out = fan_out(li, "l_orderkey", "l_linenumber")
+    keys = _hash_exchange_keys(_df_plan(out), _FAN_OUT)
+    assert keys == ["l_orderkey, l_linenumber"]
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_fan_out_leaves_a_wide_scan_alone(spark, wide_sf_dir):
+    from streaming_amqp_spark.tables import fan_out, load_table
+
+    li = load_table(spark, wide_sf_dir, "lineitem")
+    assert li.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    out = fan_out(li, "l_orderkey")
+    assert out is li
+    assert "Exchange" not in _df_plan(out)
+
+
+@pytest.mark.parametrize(
+    "name,keys",
+    [
+        # the corpus side and the n_docs count each scan documents
+        ("text_doc_frequency", ["doc_id", "doc_id"]),
+        ("agg_percentiles", ["l_returnflag"]),
+    ],
+)
+def test_queries_fan_out_only_narrow_scans(spark, sf_dir, wide_sf_dir, name, keys):
+    """The one-split scan keeps its keyed fan-out; the same data in 8
+    files plans with no REPARTITION_BY_NUM at all (the scale plan)."""
+    assert _hash_exchange_keys(_plan(spark, sf_dir, name), _FAN_OUT) == keys
+    assert _hash_exchange_keys(_plan(spark, wide_sf_dir, name), _FAN_OUT) == []

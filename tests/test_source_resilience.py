@@ -266,6 +266,29 @@ def test_spool_replay_rescans_full_range(tmp_path):
     assert [m["message_id"] for m in t.fetch(10)] == ["m4", "m5"]
 
 
+@pytest.mark.parametrize(
+    "start,end",
+    [(7, 9), (8, 10), (5, 8), (2, 8), (0, 12), (9, 40), (12, 40), (4, 4)],
+    ids=["later-file-start", "inside-later-file", "one-boundary",
+         "two-boundaries", "all", "past-end", "beyond-all", "empty"],
+)
+def test_spool_replay_range_matches_fetch_order(tmp_path, start, end):
+    """replay(start, end) across a multi-file spool returns exactly
+    fetch's messages [start, end), whether the range begins in a later
+    file or spans file boundaries; malformed lines in skipped files do
+    not shift the count."""
+    _write_spool(tmp_path, _msgs(3), fname="000.jsonl")
+    spool = _write_spool(tmp_path, _msgs(4, start=3), fname="001.jsonl")
+    with open(f"{spool}/001.jsonl", "a") as f:
+        f.write("{not json\n\n")
+    _write_spool(tmp_path, _msgs(5, start=7), fname="002.jsonl")
+    fetched = SpoolTransport(spool).fetch(100)
+    assert len(fetched) == 12
+    t = SpoolTransport(spool)
+    assert t.replay(start, end) == fetched[start:end]
+    assert t.malformed == 0 and t.consumed == 0
+
+
 def test_batch_read_drops_malformed_lines(spark, tmp_path):
     register_amqp_source(spark)
     spool = tmp_path / "spool"

@@ -13,7 +13,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from oracle_sweep import parse_state, state_header  # noqa: E402
+from oracle_sweep import parse_state, state_header, unknown_names  # noqa: E402
 
 from tests.oracle import run_oracle  # noqa: E402
 
@@ -51,6 +51,21 @@ class TestStateFileGuards:
         sf.mkdir()
         h = state_header(str(sf))
         assert parse_state(f"{h}\nq_a\n", h) == {"q_a"}
+
+
+class TestOnlyNameGuard:
+    KNOWN = {"q_a": "SELECT 1", "q_b": "SELECT 2"}
+
+    def test_registered_names_pass(self):
+        assert unknown_names(["q_b", "q_a"], self.KNOWN) == []
+
+    def test_no_subset_means_nothing_to_refuse(self):
+        assert unknown_names(None, self.KNOWN) == []
+
+    def test_comma_list_and_typo_are_reported_in_order(self):
+        # "q_a,q_b" is one argv word: it used to sweep as one red query
+        got = unknown_names(["q_a,q_b", "q_a", "q_c"], self.KNOWN)
+        assert got == ["q_a,q_b", "q_c"]
 
 
 class TestOracleViewRegistration:

@@ -61,6 +61,13 @@ def parse_state(text: str, header: str) -> set[str]:
     return {l for l in lines if not l.startswith("#")}
 
 
+def unknown_names(requested: list[str] | None, known) -> list[str]:
+    """Requested ``--only`` names that are not registered queries, in the
+    order given: a typo or a comma list (``a,b``) must be refused, not
+    swept as a red query."""
+    return [n for n in requested or () if n not in known]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
@@ -74,9 +81,17 @@ def main() -> int:
     ap.add_argument("--only", nargs="*", help="subset of query names")
     args = ap.parse_args()
 
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as e
+
+    qs, osql = e.queries(), e.oracle_sql()
+    # validate names and the resume file BEFORE paying JVM startup
+    unknown = unknown_names(args.only, osql)
+    if unknown:
+        print(f"REFUSED: unknown query names {unknown}")
+        return 1
     done: set[str] = set()
     header = state_header(args.sf_dir)
-    # validate the resume file BEFORE paying JVM startup
     if args.state and os.path.exists(args.state):
         try:
             done = parse_state(open(args.state).read(), header)
@@ -87,14 +102,10 @@ def main() -> int:
         with open(args.state, "w") as f:
             f.write(header + "\n")
 
-    sys.path.insert(0, REPO)
     from streaming_amqp_spark.session import get_spark
-
-    spark = get_spark("oracle-sweep")
-    import __spark_entry__ as e
     from tests.oracle import compare_query
 
-    qs, osql = e.queries(), e.oracle_sql()
+    spark = get_spark("oracle-sweep")
     names = sorted(args.only or osql)
     t_start = time.time()
     fails: list[str] = []
