@@ -1,43 +1,57 @@
-"""Persisted LSH index: build once on the cluster, query many jobs,
-append daily increments.
+"""Persisted indexes: build once on the cluster, query many jobs,
+append increments.
 
-The r12 slope decomposition (SCALING.md §r12) measured the MinHash
-index REBUILD — tokenize → shingle → 16 minhashes → band rows — at
-69-78% of ``dedup_minhash_lsh``'s cold timed region at the synthesized
-sf1.  Session caching (``shared_cache``) amortizes that within one
-job; it cannot amortize it ACROSS jobs, and at 100 TB "re-shingle the
-corpus every nightly batch" is the single largest avoidable cost in
-the dedup family.  The reference has no notion of a persisted index
-(its converters are per-message, `AMQPBodyFunction.scala:29-41`); this
-is the batch-side capability a training-data pipeline adds on top.
+Session caching (``shared_cache``) amortizes an index build within one
+job; this store amortizes it ACROSS jobs.  Three index families share
+one store lifecycle:
 
-The store writes exactly the two EXPENSIVE relations:
+- MinHash-LSH (``dedup_minhash_lsh_indexed``, ``minhash_index_stats``):
+  ``shingles/`` holds (doc_id, shingles, n) in doc_id hash buckets;
+  ``bands/`` holds the RAW band rows (doc_id, band_hash), directory-
+  partitioned by ``band_idx`` so a band probe prunes at the scan.
+  Bucket stats (bsz, hub) are NOT stored: an append changes the stats
+  of every bucket it lands in, so the query path re-derives them from
+  the narrow band rows (``annotate_band_stats``).
+- IVF (``ann_ivf_topk_indexed``): ``centroids/`` is the trained coarse
+  quantizer; ``vectors/`` is partitioned by ``label``, so the probe
+  join's dynamic partition pruning reads only probed clusters.
+- PQ (``ann_pq_kmeans_recall_indexed``): ``codebook/`` is the trained
+  Lloyd codebook; ``codes/`` holds long-form codes partitioned by
+  subspace ``m``.
 
-- ``shingles/`` — (doc_id, shingles array, n), laid out in doc_id hash
-  buckets so the verification join reads co-located files;
-- ``bands/`` — the RAW LSH band rows (doc_id, band_hash), directory-
-  partitioned by ``band_idx`` so any band-targeted probe prunes to one
-  directory (PartitionFilters at the scan).
+Layout and lifecycle, stated once (the helpers that own each rule are
+named in brackets):
 
-Bucket stats (bsz, hub) are deliberately NOT stored: an appended batch
-changes the size and hub of every bucket its docs land in, so stored
-stats would go stale on the first append.  The query path re-derives
-them with one map-side-combined aggregate over the narrow stored rows
-(``annotate_band_stats``) — linear, AQE-skew-splittable, and a small
-fraction of the shingling cost the store removes.
+- Path: ``INDEX_ROOT/<kind>_<md5(abspath(sf_dir))[:10]>``, one store
+  per (family, corpus) [``_index_path``].
+- ``_DONE``: the marker ``ensure_*`` writes after a build —
+  ``<version>|src=<abspath>|fp=<source fingerprint>`` plus
+  ``|cap=<MAX_BAND_FREQ>`` for MinHash.  A mismatch (a version or cap
+  change, or the corpus regenerated in place, which moves
+  ``fs.stat_fingerprint``) drops the marker and rebuilds instead of
+  serving a stale index [``_ensure``, ``_src_tag``].
+- ``_SCHEMA``: JSON of every stored dataset's schema, written at
+  build time.  A zero-row build writes no parquet part files and
+  schema inference then fails, so every stored read is schema-pinned
+  [``_write_schema``, ``_read_stored``].
+- ``_BASE_COUNT``: IVF and PQ only — rows of the stored relation when
+  the trained artifact was last computed [``_record_base_count``].
+  Appends grow the relation while centroids or codebook stay frozen;
+  that is the appendable-ANN contract (recall decays, results are
+  never wrong, since search is defined by the trained artifact).
+  ``ivf_index_staleness`` / ``pq_index_staleness`` report the appended
+  fraction against ``RETRAIN_APPEND_FRACTION`` [``_staleness``]; the
+  remedy is ``retrain_ivf_centroids`` (one aggregate over the stored
+  vectors) or ``build_pq_index`` (a new codebook re-encodes everything).
+- ``_COMPACT``: MinHash only — present (``clean`` after a build,
+  ``compacted`` after ``compact_minhash_index``) when the store holds
+  no replay duplicates, so reads skip normalization; every append
+  removes it first [``_load_raw``].
 
-``append_minhash_index`` is the incremental path: shingle ONLY the new
-docs, append their rows to both datasets (parquet append; the band
-partitioning absorbs appends natively).  Invariant, pinned by
-``tests/test_index_store.py``: build(A) + append(B) answers queries
-identically to build(A ∪ B).
-
-``dedup_minhash_lsh_indexed`` is result-IDENTICAL to
-``dedup_minhash_lsh`` (same oracle SQL attests both) — the only
-difference is where the pair phase's inputs come from.  The _DONE
-marker records the synth version + the cap constant, so a change to
-the banding space or caps rebuilds instead of silently serving a stale
-index (the bench-sf1/degenerate-corpus discipline).
+Invariants pinned by ``tests/test_index_store.py``: each indexed query
+is result-identical to its recompute twin (the same oracle SQL attests
+both); build(A) + append(B) answers like build(A ∪ B) (IVF after a
+retrain; PQ under the same codebook); and the format above.
 
 Concurrency contract: ONE writer per index path.  ``ensure_*`` is
 read-mostly (marker check), but two processes that both observe a
@@ -49,26 +63,6 @@ single query per path by construction).
 All marker/metadata IO goes through ``streaming_amqp_spark.fs`` — the
 documented local-FS ⇄ object-store seam; the parquet data itself moves
 through Spark's own Hadoop-FS readers/writers either way.
-
-Staleness, two distinct kinds:
-
-- SOURCE staleness — the corpus at ``sf_dir`` was regenerated in place
-  (resynthesized sweep corpora, rebuilt bench sf1).  Guarded by folding
-  ``fs.stat_fingerprint`` of the source table into every ``_DONE``
-  marker: ``ensure_*`` sees the mismatch and rebuilds instead of
-  serving an index of the OLD data (ADVICE r13).
-- TRAINED-ARTIFACT staleness — appends grow the stored relations while
-  the trained part (IVF centroids, PQ codebook) stays frozen at its
-  last training run.  That is the deliberate contract of an appendable
-  ANN index (recall decays gradually; it is never "wrong" in the
-  oracle sense, because search semantics are defined BY the trained
-  artifact).  ``ivf_index_staleness`` / ``pq_index_staleness`` report
-  the appended fraction; the documented retrain trigger is ≥ 10%
-  appended since last training (RETRAIN_APPEND_FRACTION), at which
-  point run ``retrain_ivf_centroids`` (cheap: one aggregate over the
-  stored vectors) or ``build_pq_index`` (PQ retrain IS the rebuild:
-  Lloyd depends on the full corpus and every stored code must be
-  re-encoded under the new codebook).
 """
 
 from __future__ import annotations
@@ -79,7 +73,7 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (kept for callers)
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from streaming_amqp_spark import fs
@@ -106,18 +100,77 @@ _N_SHINGLE_BUCKETS = 8
 RETRAIN_APPEND_FRACTION = 0.10
 
 
-def minhash_index_path(sf_dir: str) -> str:
+# ------------------------------------------------------ store lifecycle
+
+
+def _index_path(kind: str, sf_dir: str) -> str:
+    # INDEX_ROOT is read at call time, so a caller may point it elsewhere
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    return os.path.join(INDEX_ROOT, f"minhash_{tag}")
+    return os.path.join(INDEX_ROOT, f"{kind}_{tag}")
 
 
 def _src_tag(sf_dir: str, table: str) -> str:
     """source identity + content fingerprint of the ONE table an index
     derives from — a corpus regenerated in place (same path, new data)
-    changes the fingerprint and forces a rebuild (ADVICE r13)."""
+    changes the fingerprint and forces a rebuild."""
     src = os.path.abspath(sf_dir)
     fp = fs.stat_fingerprint(os.path.join(src, f"{table}.parquet"))
     return f"src={src}|fp={fp}"
+
+
+def _ensure(path: str, want: str, build) -> str:
+    """Serve ``path`` if its ``_DONE`` marker reads ``want``; otherwise
+    drop the marker, ``build(path)`` and attest it."""
+    marker = os.path.join(path, "_DONE")
+    if fs.exists(marker) and fs.read_text(marker).strip() == want:
+        return path
+    fs.makedirs(path)
+    fs.remove(marker)  # stale build: never serve it mid-rebuild
+    build(path)
+    fs.write_text(marker, want)
+    return path
+
+
+def _write_schema(path: str, **datasets: DataFrame) -> None:
+    fs.write_text(
+        os.path.join(path, "_SCHEMA"),
+        json.dumps({k: df.schema.jsonValue() for k, df in datasets.items()}),
+    )
+
+
+def _read_stored(spark: SparkSession, path: str, dataset: str) -> DataFrame:
+    """Schema-pinned read of one stored relation (see ``_SCHEMA``)."""
+    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
+    return spark.read.schema(StructType.fromJson(meta[dataset])).parquet(
+        os.path.join(path, dataset)
+    )
+
+
+def _record_base_count(spark: SparkSession, path: str, dataset: str) -> None:
+    """Row count of the stored relation at the moment the trained
+    artifact was (re)computed — the denominator of the staleness
+    fraction.  One metadata-only parquet count."""
+    n = _read_stored(spark, path, dataset).count()
+    fs.write_text(os.path.join(path, "_BASE_COUNT"), str(n))
+
+
+def _staleness(spark: SparkSession, path: str, dataset: str) -> dict:
+    base = int(fs.read_text(os.path.join(path, "_BASE_COUNT")).strip())
+    now = _read_stored(spark, path, dataset).count()
+    frac = (now - base) / base if base else float(now > 0)
+    return {
+        "base_rows": base,
+        "current_rows": now,
+        "appended_fraction": frac,
+        "retrain_due": frac >= RETRAIN_APPEND_FRACTION,
+    }
+
+
+# ------------------------------------------------------------- MinHash
+
+
+def minhash_index_path(sf_dir: str) -> str:
+    return _index_path("minhash", sf_dir)
 
 
 def _marker_want(sf_dir: str) -> str:
@@ -131,8 +184,9 @@ def _write_batch(sh: DataFrame, path: str, mode: str) -> None:
     """One shingled batch → both datasets.  ``mode='append'`` is the
     incremental path; parquet directory-append is atomic per file and
     the band partitioning absorbs new files per band_idx dir."""
+    shingles_dir = os.path.join(path, "shingles")
     sh.repartition(_N_SHINGLE_BUCKETS, "doc_id").write.mode(mode).parquet(
-        os.path.join(path, "shingles")
+        shingles_dir
     )
     bands = band_rows_of(
         sh
@@ -144,35 +198,19 @@ def _write_batch(sh: DataFrame, path: str, mode: str) -> None:
         # projection once more, an accepted cost on increment-sized
         # batches (bounding it with a persist would pin executor memory
         # per micro-batch for a projection that is cheap at that size)
-        else _read(sh.sparkSession, os.path.join(path, "shingles"), sh.schema)
+        else sh.sparkSession.read.schema(sh.schema).parquet(shingles_dir)
     )
     bands.write.mode(mode).partitionBy("band_idx").parquet(
         os.path.join(path, "bands")
     )
     if mode != "append" or not fs.exists(os.path.join(path, "_SCHEMA")):
-        # persist both read schemas: a zero-row build (empty corpus /
-        # empty bootstrap increment) writes no parquet part files, and
-        # read-side inference then fails with UNABLE_TO_INFER_SCHEMA —
-        # found by the r13 empty-corpus sweep on this very module.
-        # (append-to-fresh-dir — a stream bootstrapping its own index —
-        # also writes it)
-        fs.write_text(
-            os.path.join(path, "_SCHEMA"),
-            json.dumps(
-                {
-                    "shingles": sh.schema.jsonValue(),
-                    "bands": bands.schema.jsonValue(),
-                }
-            ),
-        )
+        # append-to-fresh-dir (a stream bootstrapping its own index)
+        # writes the sidecar too
+        _write_schema(path, shingles=sh, bands=bands)
     if mode != "append":
         # a fresh build holds no replay duplicates by construction, so
         # reads may skip normalization until the first append arrives
         fs.write_text(os.path.join(path, "_COMPACT"), "clean")
-
-
-def _read(spark: SparkSession, data_dir: str, schema: StructType) -> DataFrame:
-    return spark.read.schema(schema).parquet(data_dir)
 
 
 def build_minhash_index(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -198,16 +236,11 @@ def append_minhash_index(docs: DataFrame, path: str) -> None:
 
 
 def ensure_minhash_index(spark: SparkSession, sf_dir: str) -> str:
-    path = minhash_index_path(sf_dir)
-    marker = os.path.join(path, "_DONE")
-    want = _marker_want(sf_dir)
-    if fs.exists(marker) and fs.read_text(marker).strip() == want:
-        return path
-    fs.makedirs(path)
-    fs.remove(marker)  # stale build: never serve it mid-rebuild
-    build_minhash_index(spark, sf_dir, path)
-    fs.write_text(marker, want)
-    return path
+    return _ensure(
+        minhash_index_path(sf_dir),
+        _marker_want(sf_dir),
+        lambda p: build_minhash_index(spark, sf_dir, p),
+    )
 
 
 def _load_raw(
@@ -235,17 +268,8 @@ def _load_raw(
     100 TB that is a full extra pass over the wide shingle arrays; the
     r13 measurement put it at noise level only because the pair phase
     re-shuffles those rows anyway)."""
-    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
-    sh = _read(
-        spark,
-        os.path.join(path, "shingles"),
-        StructType.fromJson(meta["shingles"]),
-    )
-    bands = _read(
-        spark,
-        os.path.join(path, "bands"),
-        StructType.fromJson(meta["bands"]),
-    )
+    sh = _read_stored(spark, path, "shingles")
+    bands = _read_stored(spark, path, "bands")
     if not fs.exists(os.path.join(path, "_COMPACT")):
         sh = sh.dropDuplicates()
         bands = bands.dropDuplicates()
@@ -377,28 +401,7 @@ _IVF_VERSION = "ivfidx-v2"  # v2: source fingerprint, append + retrain
 
 
 def ivf_index_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    return os.path.join(INDEX_ROOT, f"ivf_{tag}")
-
-
-def _read_stored(spark: SparkSession, path: str, dataset: str) -> DataFrame:
-    """Schema-pinned read of one stored relation: a zero-row build
-    (empty corpus) writes no part files and schema INFERENCE fails with
-    UNABLE_TO_INFER_SCHEMA — the _SCHEMA sidecar makes every store
-    loadable regardless (caught by the r14 empty-corpus matrix on the
-    staleness counters)."""
-    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
-    return _read(
-        spark, os.path.join(path, dataset), StructType.fromJson(meta[dataset])
-    )
-
-
-def _record_base_count(spark: SparkSession, path: str, dataset: str) -> None:
-    """Row count of the stored relation at the moment the trained
-    artifact was (re)computed — the denominator of the staleness
-    fraction.  One metadata-only parquet count."""
-    n = _read_stored(spark, path, dataset).count()
-    fs.write_text(os.path.join(path, "_BASE_COUNT"), str(n))
+    return _index_path("ivf", sf_dir)
 
 
 def build_ivf_index_from(emb: DataFrame, path: str) -> None:
@@ -416,22 +419,8 @@ def build_ivf_index_from(emb: DataFrame, path: str) -> None:
     emb.write.mode("overwrite").partitionBy("label").parquet(
         os.path.join(path, "vectors")
     )
-    fs.write_text(
-        os.path.join(path, "_SCHEMA"),
-        json.dumps(
-            {
-                "centroids": cent.schema.jsonValue(),
-                "vectors": emb.schema.jsonValue(),
-            }
-        ),
-    )
+    _write_schema(path, centroids=cent, vectors=emb)
     _record_base_count(emb.sparkSession, path, "vectors")
-
-
-def build_ivf_index(spark: SparkSession, sf_dir: str, path: str) -> None:
-    from streaming_amqp_spark.operators.similarity import _emb
-
-    build_ivf_index_from(_emb(spark, sf_dir), path)
 
 
 def append_ivf_index(vecs: DataFrame, path: str) -> None:
@@ -459,14 +448,9 @@ def retrain_ivf_centroids(spark: SparkSession, path: str) -> None:
         ivf_centroids_of,
     )
 
-    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
-    vec = _read(
-        spark,
-        os.path.join(path, "vectors"),
-        StructType.fromJson(meta["vectors"]),
-    )
     # centroids derive from vectors/, not centroids/, so the overwrite
     # never reads its own output
+    vec = _read_stored(spark, path, "vectors")
     ivf_centroids_of(vec).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
     )
@@ -477,45 +461,26 @@ def ivf_index_staleness(spark: SparkSession, path: str) -> dict:
     """How far the frozen quantizer lags the stored vectors: rows at
     last training, rows now, appended fraction, and whether the
     documented retrain trigger has fired."""
-    base = int(fs.read_text(os.path.join(path, "_BASE_COUNT")).strip())
-    now = _read_stored(spark, path, "vectors").count()
-    frac = (now - base) / base if base else float(now > 0)
-    return {
-        "base_rows": base,
-        "current_rows": now,
-        "appended_fraction": frac,
-        "retrain_due": frac >= RETRAIN_APPEND_FRACTION,
-    }
+    return _staleness(spark, path, "vectors")
 
 
 def ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
-    path = ivf_index_path(sf_dir)
-    marker = os.path.join(path, "_DONE")
-    want = f"{_IVF_VERSION}|{_src_tag(sf_dir, 'embeddings')}"
-    if fs.exists(marker) and fs.read_text(marker).strip() == want:
-        return path
-    fs.makedirs(path)
-    fs.remove(marker)
-    build_ivf_index(spark, sf_dir, path)
-    fs.write_text(marker, want)
-    return path
+    from streaming_amqp_spark.operators.similarity import _emb
+
+    return _ensure(
+        ivf_index_path(sf_dir),
+        f"{_IVF_VERSION}|{_src_tag(sf_dir, 'embeddings')}",
+        lambda p: build_ivf_index_from(_emb(spark, sf_dir), p),
+    )
 
 
 def load_ivf_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
-    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
-    vec = _read(
-        spark,
-        os.path.join(path, "vectors"),
-        StructType.fromJson(meta["vectors"]),
+    return (
+        _read_stored(spark, path, "vectors"),
+        _read_stored(spark, path, "centroids"),
     )
-    cent = _read(
-        spark,
-        os.path.join(path, "centroids"),
-        StructType.fromJson(meta["centroids"]),
-    )
-    return vec, cent
 
 
 def ann_ivf_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -541,8 +506,7 @@ _PQ_VERSION = "pqidx-v2"  # v2: source fingerprint, append + staleness
 
 
 def pq_index_path(sf_dir: str) -> str:
-    tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:10]
-    return os.path.join(INDEX_ROOT, f"pq_{tag}")
+    return _index_path("pq", sf_dir)
 
 
 def build_pq_index_from(emb: DataFrame, path: str) -> None:
@@ -553,31 +517,22 @@ def build_pq_index_from(emb: DataFrame, path: str) -> None:
         _pq_train_kmeans,
     )
 
-    _write_pq(emb.sparkSession, emb, _pq_train_kmeans(emb), path)
+    _write_pq(emb, _pq_train_kmeans(emb), path)
 
 
-def _write_pq(
-    spark: SparkSession, emb: DataFrame, cb: DataFrame, path: str
-) -> None:
+def _write_pq(emb: DataFrame, cb: DataFrame, path: str) -> None:
+    from streaming_amqp_spark.operators.similarity import pq_codes_long
+
+    spark = emb.sparkSession
     cb.write.mode("overwrite").parquet(os.path.join(path, "codebook"))
     # re-read the materialized codebook so Lloyd doesn't run twice
     # (once for the write above, once inside the encode)
     cb = spark.read.parquet(os.path.join(path, "codebook"))
-    from streaming_amqp_spark.operators.similarity import pq_codes_long
-
     codes = pq_codes_long(emb, cb)
     codes.write.mode("overwrite").partitionBy("m").parquet(
         os.path.join(path, "codes")
     )
-    fs.write_text(
-        os.path.join(path, "_SCHEMA"),
-        json.dumps(
-            {
-                "codebook": cb.schema.jsonValue(),
-                "codes": codes.schema.jsonValue(),
-            }
-        ),
-    )
+    _write_schema(path, codebook=cb, codes=codes)
     _record_base_count(spark, path, "codes")
 
 
@@ -594,7 +549,7 @@ def build_pq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
     # _pq_trained is the session-cached Lloyd run (shared with the
     # recompute queries); parquet round-trips doubles losslessly, so
     # re-reading it inside _write_pq is value-identical
-    _write_pq(spark, _emb(spark, sf_dir), _pq_trained(spark, sf_dir), path)
+    _write_pq(_emb(spark, sf_dir), _pq_trained(spark, sf_dir), path)
 
 
 def append_pq_index(vecs: DataFrame, path: str) -> None:
@@ -610,12 +565,7 @@ def append_pq_index(vecs: DataFrame, path: str) -> None:
     ``pq_index_staleness``).  Caller owns vec_id uniqueness."""
     from streaming_amqp_spark.operators.similarity import pq_codes_long
 
-    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
-    cb = _read(
-        vecs.sparkSession,
-        os.path.join(path, "codebook"),
-        StructType.fromJson(meta["codebook"]),
-    )
+    cb = _read_stored(vecs.sparkSession, path, "codebook")
     pq_codes_long(vecs, cb).write.mode("append").partitionBy("m").parquet(
         os.path.join(path, "codes")
     )
@@ -625,45 +575,24 @@ def pq_index_staleness(spark: SparkSession, path: str) -> dict:
     """How far the frozen codebook lags the stored codes — same shape
     as ``ivf_index_staleness``; when ``retrain_due`` fires, the remedy
     is a full ``build_pq_index`` (see ``append_pq_index``)."""
-    base = int(fs.read_text(os.path.join(path, "_BASE_COUNT")).strip())
-    now = _read_stored(spark, path, "codes").count()
-    frac = (now - base) / base if base else float(now > 0)
-    return {
-        "base_rows": base,
-        "current_rows": now,
-        "appended_fraction": frac,
-        "retrain_due": frac >= RETRAIN_APPEND_FRACTION,
-    }
+    return _staleness(spark, path, "codes")
 
 
 def ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
-    path = pq_index_path(sf_dir)
-    marker = os.path.join(path, "_DONE")
-    want = f"{_PQ_VERSION}|{_src_tag(sf_dir, 'embeddings')}"
-    if fs.exists(marker) and fs.read_text(marker).strip() == want:
-        return path
-    fs.makedirs(path)
-    fs.remove(marker)
-    build_pq_index(spark, sf_dir, path)
-    fs.write_text(marker, want)
-    return path
+    return _ensure(
+        pq_index_path(sf_dir),
+        f"{_PQ_VERSION}|{_src_tag(sf_dir, 'embeddings')}",
+        lambda p: build_pq_index(spark, sf_dir, p),
+    )
 
 
 def load_pq_index(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, DataFrame]:
-    meta = json.loads(fs.read_text(os.path.join(path, "_SCHEMA")))
-    cb = _read(
-        spark,
-        os.path.join(path, "codebook"),
-        StructType.fromJson(meta["codebook"]),
+    return (
+        _read_stored(spark, path, "codebook"),
+        _read_stored(spark, path, "codes"),
     )
-    codes = _read(
-        spark,
-        os.path.join(path, "codes"),
-        StructType.fromJson(meta["codes"]),
-    )
-    return cb, codes
 
 
 def ann_pq_kmeans_recall_indexed(

@@ -319,11 +319,13 @@ def text_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same explode → count shape, one agg shuffle with map-side
     combine; bounded output via top-k.
 
-    (r15: fan-out A/B'd and REJECTED here — 0.82 → 0.96 s; unlike
-    text_doc_frequency's distinct-token explode, the raw bigram explode
-    leaves little for the map-side combine, so the added exchange of
-    full text rows outweighs the parallelism.)"""
-    d = _docs(spark, sf_dir)
+    Reads the scan without ``fan_out``: unlike text_doc_frequency's
+    distinct-token explode, the raw bigram explode leaves little for
+    the map-side combine, and an exchange of full text rows costs more
+    executor CPU than the parallelism saves in wall time (sf0.1,
+    local[3], six alternating runs: CPU median 456 ms with the fan-out
+    vs 375 ms without, wall 0.70 vs 0.74 s)."""
+    d = load_table(spark, sf_dir, "documents")
 
     def bigrams_of(t):  # let-bound: element_at must hit a lambda variable,
         # not re-split the text per position (O(n²) HOF trap)

@@ -215,21 +215,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Upper bound on live shared_cache entries.  The package has 14 cache
-# kinds (tests/test_shared_cache.py counts them), and the registered
-# queries key each kind once per corpus, so one corpus's artifacts never
-# evict one another whatever order queries run in.  What the cap bounds
-# is a long-lived session over several corpora (sf_dirs), where entries
-# would otherwise accumulate without limit.
-# Eviction is semantics-neutral: a re-referenced evicted relation
-# recomputes (slower, never wrong).
-_SHARED_CACHE_CAP = 14
-
-
 def shared_cache(spark: SparkSession, key: tuple, build) -> DataFrame:
-    """Session-scoped LRU registry of cached relations: at most ONE cached
-    DataFrame per key, reused across query invocations, at most
-    ``_SHARED_CACHE_CAP`` live per session.
+    """Session-scoped registry of cached relations: at most ONE cached
+    DataFrame per key, reused across query invocations, for ONE corpus
+    at a time.
 
     Only a session artifact belongs here: a relation that at least two
     registered queries read.  Its key is ``(kind, sf_dir)`` plus operator
@@ -239,27 +228,26 @@ def shared_cache(spark: SparkSession, key: tuple, build) -> DataFrame:
     ``localCheckpoint(eager=False)`` instead, and a subplan referenced
     once gets no materialization at all.
 
+    The registry holds the corpus (``key[1]``) it was last asked for: a
+    key from another corpus first unpersists and drops every entry, so
+    a long-lived session over several corpora holds one corpus's
+    artifacts, and one corpus never evicts its own.  Eviction is
+    semantics-neutral: a re-referenced relation recomputes.
+
     A bare ``.cache()`` inside an operator pins a NEW InMemoryRelation in
     the session's storage memory on every call and nothing ever
     unpersists it; keying the cache on the session bounds entries to the
     distinct keys actually used.  Callers that mutate inputs in place
     must call ``clear_shared_cache``.
     """
-    from collections import OrderedDict
-
     reg = getattr(spark, "_saq_shared_cache", None)
-    if not isinstance(reg, OrderedDict):
-        reg = OrderedDict(reg or {})
-        spark._saq_shared_cache = reg
+    if reg is None:
+        reg = spark._saq_shared_cache = {}
     df = reg.get(key)
     if df is None:
-        df = build().cache()
-        reg[key] = df
-        while len(reg) > _SHARED_CACHE_CAP:
-            _, evicted = reg.popitem(last=False)
-            evicted.unpersist(blocking=False)
-    else:
-        reg.move_to_end(key)
+        if any(k[1] != key[1] for k in reg):
+            clear_shared_cache(spark)
+        df = reg[key] = build().cache()
     return df
 
 

@@ -26,6 +26,20 @@ def sf_dir() -> str:
     return SF_DIR
 
 
+@pytest.fixture(scope="session", autouse=True)
+def _private_index_root(tmp_path_factory):
+    """Every test's ``ensure_*`` index lands under one per-session tmp
+    dir, never the machine-wide ``INDEX_ROOT`` that oracle sweeps and bench
+    serve: the store allows one writer per index path."""
+    from streaming_amqp_spark.operators import index_store
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            index_store, "INDEX_ROOT", str(tmp_path_factory.mktemp("index_root"))
+        )
+        yield
+
+
 def envelope_rows(read_result) -> list[tuple]:
     """Flatten a reader ``read()`` result — an iterator of envelope row
     tuples OR pyarrow RecordBatches (the sources ship columnar since the

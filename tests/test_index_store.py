@@ -6,6 +6,7 @@ change (a stale index silently served is a wrong-dedup at 100 TB).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -397,3 +398,96 @@ def test_empty_corpus_ivf_pq_builds_are_loadable(spark, tmp_path):
     assert codes.count() == 0
     st = ixs.pq_index_staleness(spark, pq_p)
     assert st["base_rows"] == 0 and not st["retrain_due"]
+
+
+def _store_names(path):
+    """Visible names of a store dir; for each dataset dir, its visible
+    entries' name prefixes (``band_idx=``, ``part-``, …)."""
+    out = {}
+    for name in sorted(os.listdir(path)):
+        if name.startswith("."):
+            continue  # checksum files of the local FS
+        full = os.path.join(path, name)
+        out[name] = (
+            sorted({
+                d.split("=")[0] + "=" if "=" in d else d.split("-")[0]
+                for d in os.listdir(full)
+                if not d.startswith(".")
+            })
+            if os.path.isdir(full)
+            else None
+        )
+    return out
+
+
+def _schema_keys(path):
+    meta = json.loads(open(os.path.join(path, "_SCHEMA")).read())
+    return [(k, [f["name"] for f in v["fields"]]) for k, v in meta.items()]
+
+
+def test_store_format_is_pinned(spark, tmp_path):
+    """The on-disk contract a store written by an earlier build must keep
+    satisfying: file-tree names, ``_SCHEMA`` keys in order, the
+    ``_BASE_COUNT`` / ``_COMPACT`` contents and the ``_DONE`` string
+    each ``ensure_*`` writes.  Changing any of these strands every
+    existing store (served wrongly or silently rebuilt)."""
+    from streaming_amqp_spark import fs
+    from streaming_amqp_spark.operators.dedup import MAX_BAND_FREQ
+    from streaming_amqp_spark.tables import load_table
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    mh = str(tmp_path / "mh")
+    ixs._write_batch(shingles_of(docs), mh, "overwrite")
+    assert _store_names(mh) == {
+        "_COMPACT": None,
+        "_SCHEMA": None,
+        "bands": ["_SUCCESS", "band_idx="],
+        "shingles": ["_SUCCESS", "part"],
+    }
+    assert _schema_keys(mh) == [
+        ("shingles", ["doc_id", "shingles", "n"]),
+        ("bands", ["doc_id", "band_idx", "band_hash"]),
+    ]
+    assert open(os.path.join(mh, "_COMPACT")).read() == "clean"
+    ixs.append_minhash_index(docs.limit(10), mh)
+    assert not os.path.exists(os.path.join(mh, "_COMPACT"))
+    ixs.compact_minhash_index(spark, mh)
+    assert open(os.path.join(mh, "_COMPACT")).read() == "compacted"
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    ivf = str(tmp_path / "ivf")
+    ixs.build_ivf_index_from(emb, ivf)
+    assert _store_names(ivf) == {
+        "_BASE_COUNT": None,
+        "_SCHEMA": None,
+        "centroids": ["_SUCCESS", "part"],
+        "vectors": ["_SUCCESS", "label="],
+    }
+    assert [k for k, _ in _schema_keys(ivf)] == ["centroids", "vectors"]
+    assert open(os.path.join(ivf, "_BASE_COUNT")).read() == str(emb.count())
+
+    pq = str(tmp_path / "pq")
+    ixs.build_pq_index_from(emb, pq)
+    assert _store_names(pq) == {
+        "_BASE_COUNT": None,
+        "_SCHEMA": None,
+        "codebook": ["_SUCCESS", "part"],
+        "codes": ["_SUCCESS", "m="],
+    }
+    assert [k for k, _ in _schema_keys(pq)] == ["codebook", "codes"]
+    n_codes = spark.read.parquet(os.path.join(pq, "codes")).count()
+    assert open(os.path.join(pq, "_BASE_COUNT")).read() == str(n_codes)
+
+    src = os.path.abspath(SF_DIR)
+    fp_docs = fs.stat_fingerprint(os.path.join(src, "documents.parquet"))
+    fp_emb = fs.stat_fingerprint(os.path.join(src, "embeddings.parquet"))
+    for ensure, want in (
+        (
+            ixs.ensure_minhash_index,
+            f"mhidx-v4|src={src}|fp={fp_docs}|cap={MAX_BAND_FREQ}",
+        ),
+        (ixs.ensure_ivf_index, f"ivfidx-v2|src={src}|fp={fp_emb}"),
+        (ixs.ensure_pq_index, f"pqidx-v2|src={src}|fp={fp_emb}"),
+    ):
+        path = ensure(spark, SF_DIR)
+        assert open(os.path.join(path, "_DONE")).read() == want

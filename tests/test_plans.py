@@ -599,52 +599,6 @@ def test_bpe_apply_is_single_stage_projection(spark, sf_dir):
     assert "Exchange rangepartitioning" not in plan, plan[:900]
 
 
-def test_shared_cache_is_lru_bounded_and_unpersists_evicted(spark):
-    """The session cache registry must not grow without bound: a
-    long-lived session running many heavy (operator, sf_dir) pairs
-    filled storage memory until broadcast builds failed (r8 100x probe).
-    The LRU cap evicts oldest-first AND unpersists the evicted relation;
-    re-requesting an evicted key rebuilds it (never returns a stale
-    unpersisted handle)."""
-    from streaming_amqp_spark.tables import _SHARED_CACHE_CAP, shared_cache
-
-    # isolate from caches other tests created in this shared session
-    saved = getattr(spark, "_saq_shared_cache", None)
-    spark._saq_shared_cache = None
-    try:
-        built: list[str] = []
-
-        def mk(i: int):
-            def build():
-                built.append(f"k{i}")
-                return spark.range(i + 1).toDF("v")
-
-            return build
-
-        dfs = {}
-        for i in range(_SHARED_CACHE_CAP + 3):
-            dfs[i] = shared_cache(spark, ("lru_probe", i), mk(i))
-        reg = spark._saq_shared_cache
-        assert len(reg) == _SHARED_CACHE_CAP
-        # oldest three evicted and unpersisted; newest still cached
-        for i in range(3):
-            assert ("lru_probe", i) not in reg
-            assert not dfs[i].is_cached
-        assert dfs[_SHARED_CACHE_CAP + 2].is_cached
-        # re-request of an evicted key REBUILDS (build called again)
-        n_built = len(built)
-        again = shared_cache(spark, ("lru_probe", 0), mk(0))
-        assert len(built) == n_built + 1 and again.is_cached
-        # LRU recency: touching the oldest survivor protects it from the
-        # next insertion's eviction
-        survivor = ("lru_probe", 4)
-        shared_cache(spark, survivor, mk(4))  # hit -> most recent
-        shared_cache(spark, ("lru_probe", 99), mk(99))
-        assert survivor in spark._saq_shared_cache
-    finally:
-        spark._saq_shared_cache = saved
-
-
 def test_clear_shared_cache_unpersists_and_rebuilds(spark):
     """clear_shared_cache (the measurement-harness hook, ADVICE r8) must
     unpersist every live entry, empty the registry, and make the next
@@ -664,13 +618,13 @@ def test_clear_shared_cache_unpersists_and_rebuilds(spark):
 
             return build
 
-        a = shared_cache(spark, ("clear_probe", 0), mk(0))
-        b = shared_cache(spark, ("clear_probe", 1), mk(1))
+        a = shared_cache(spark, ("clear_probe", "corpus", 0), mk(0))
+        b = shared_cache(spark, ("clear_probe", "corpus", 1), mk(1))
         assert a.is_cached and b.is_cached and built == [0, 1]
         clear_shared_cache(spark)
         assert not spark._saq_shared_cache
         assert not a.is_cached and not b.is_cached
-        shared_cache(spark, ("clear_probe", 0), mk(0))
+        shared_cache(spark, ("clear_probe", "corpus", 0), mk(0))
         assert built == [0, 1, 0]  # rebuilt, not a stale handle
         # no-op on a session that never built a registry
         spark._saq_shared_cache = None

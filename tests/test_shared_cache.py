@@ -1,7 +1,7 @@
 """The session-artifact rule for ``tables.shared_cache``: only a relation
 that at least two registered queries read is session-cached, keyed by a
-literal kind plus ``sf_dir`` and operator constants — so the kinds one
-corpus creates fit the LRU cap and never evict one another."""
+literal kind plus ``sf_dir`` and operator constants — and the registry
+holds one corpus at a time."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import ast
 from pathlib import Path
 
 import streaming_amqp_spark
-from streaming_amqp_spark.tables import _SHARED_CACHE_CAP
 
 _PACKAGE = Path(streaming_amqp_spark.__file__).resolve().parent
 
@@ -40,10 +39,50 @@ def _shared_cache_kinds() -> dict[str, list[str]]:
     return kinds
 
 
-def test_shared_cache_kinds_fit_the_cap():
+def test_shared_cache_kinds_are_literals():
     kinds = _shared_cache_kinds()
     assert None not in kinds, f"kind is not a string literal at {kinds.get(None)}"
-    assert len(kinds) <= _SHARED_CACHE_CAP, sorted(kinds)
+
+
+def test_second_corpus_unpersists_the_first(spark):
+    """A key from another corpus (``key[1]``) unpersists and drops every
+    entry of the registry's corpus; a key from the same corpus evicts
+    nothing; a dropped key asked for again is rebuilt, never served as
+    a stale unpersisted handle."""
+    from streaming_amqp_spark.tables import shared_cache
+
+    # isolate from caches other tests created in this shared session
+    saved = getattr(spark, "_saq_shared_cache", None)
+    spark._saq_shared_cache = None
+    try:
+        built: list[tuple] = []
+
+        def get(*key):
+            def build():
+                built.append(key)
+                return spark.range(len(built)).toDF("v")
+
+            return shared_cache(spark, key, build)
+
+        first = [get("kind_a", "/corpus/a"), get("kind_b", "/corpus/a", 3)]
+        assert get("kind_a", "/corpus/a") is first[0]  # hit
+        assert all(df.is_cached for df in first)
+        assert sorted(spark._saq_shared_cache) == [
+            ("kind_a", "/corpus/a"),
+            ("kind_b", "/corpus/a", 3),
+        ]
+
+        other = get("kind_a", "/corpus/b")
+        assert list(spark._saq_shared_cache) == [("kind_a", "/corpus/b")]
+        assert not any(df.is_cached for df in first)
+        assert other.is_cached
+
+        n_built = len(built)
+        again = get("kind_a", "/corpus/a")
+        assert len(built) == n_built + 1 and again.is_cached
+        assert again is not first[0] and not other.is_cached
+    finally:
+        spark._saq_shared_cache = saved
 
 
 def test_minhash_recall_keeps_only_session_artifacts(spark, sf_dir):
