@@ -20,8 +20,8 @@ Semantics mapping (reference → here):
   (ReliableAMQPReceiver.scala:111-169) → messages stay unsettled until
   Spark calls ``commit(offset)``, which settles them.  The reader keeps no
   copy: within a run Spark's prefetch cache replays a batch; after a
-  restart the spool replays the offset range (exactly once) or the broker
-  redelivers the unsettled tail (at least once).
+  restart the spool re-reads the batch's stored byte range (exactly once)
+  or the broker redelivers the unsettled tail (at least once).
 - Unreliable receiver (AMQPReceiver.scala:159-162) → ``reliable=false``
   settles on receive (at-most-once on failure).
 - Rate controllers (AMQPRateController.scala) → admission control: at most
@@ -48,13 +48,12 @@ from __future__ import annotations
 import base64
 import json
 import os
+import sys
 import time
-from collections import deque
 from datetime import datetime, timezone
 from functools import lru_cache
 from typing import Any, Iterator
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -65,6 +64,7 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
+from pyspark.sql.datasource_internal import _SimpleStreamReaderWrapper
 from pyspark.sql.types import StructType
 
 from streaming_amqp_spark.envelope import ENVELOPE_SCHEMA
@@ -245,19 +245,49 @@ def _parse_spool_line(line: str) -> dict | None:
     return msg if isinstance(msg, dict) else None
 
 
-def _parse_spool_lines(data: bytes) -> tuple[list[dict], int]:
-    """Spool bytes → (messages, malformed count): the one parse loop of
-    every spool reader.  Bytes after the last newline are ignored."""
+def _parse_spool_lines(data: bytes, max_n: int = sys.maxsize) -> tuple[list, int, int]:
+    """Spool bytes → (messages, malformed count, bytes used): the one parse
+    loop of every spool reader.  Bytes after the last newline are ignored;
+    it stops after the newline-terminated line that brings the messages to
+    ``max_n``, and ``bytes used`` ends just after that line."""
     msgs: list[dict] = []
     malformed = 0
-    for raw in data[: data.rfind(b"\n") + 1].splitlines():
+    used = data.rfind(b"\n") + 1
+    lines = data[:used].splitlines(keepends=True)
+    for i, raw in enumerate(lines):
         line = raw.decode("utf-8", errors="replace")
         if line.strip():
             if (msg := _parse_spool_line(line)) is not None:
                 msgs.append(msg)
             else:
                 malformed += 1
-    return msgs, malformed
+        if len(msgs) >= max_n and raw[-1] == 10:  # ends in b"\n"
+            return msgs, malformed, sum(map(len, lines[: i + 1]))
+    return msgs, malformed, used
+
+
+SPOOL_READ_BYTES = 1 << 16  # read block of every spool reader; bounds its memory
+
+
+def _spool_blocks(
+    path: str, pos: int, hi: int, max_n: int = sys.maxsize
+) -> Iterator[tuple[list, int, int]]:
+    """Parse ``path`` from byte ``pos`` to ``hi`` in ``SPOOL_READ_BYTES``
+    blocks, each block's unterminated tail carried into the next: yields
+    ``(messages, malformed, position after them)`` per block, and stops
+    after the line that brings the messages to ``max_n``."""
+    with open(path, "rb") as f:
+        f.seek(pos)
+        carry = b""
+        while max_n > 0 and (
+            block := f.read(min(SPOOL_READ_BYTES, hi - pos - len(carry)))
+        ):
+            data = carry + block
+            msgs, malformed, used = _parse_spool_lines(data, max_n)
+            max_n -= len(msgs)
+            pos += used
+            carry = data[used:]
+            yield msgs, malformed, pos
 
 
 def _spool_files(spool_dir: str) -> list[str]:
@@ -316,88 +346,49 @@ class SpoolTransport(Transport):
     in tests exactly like the reference's embedded ActiveMQ / in-process
     ProtonServer (AMQPTestUtils.scala:66-91,213-266).
 
-    The spool-line rule, which every spool reader (``fetch``, ``replay``,
-    ``AMQPScaleOutStreamReader``, ``AMQPBatchReader``) applies through
-    ``_parse_spool_lines``: a message is one newline-terminated line (the
-    terminated prefix splits as ``bytes.splitlines`` does), decoded as
-    UTF-8 with invalid bytes replaced, parsed as a JSON object.  A blank
-    line is skipped; a malformed or non-object line is dropped (``fetch``
-    counts it in ``malformed``); bytes after a file's last newline stay
-    unread until their newline arrives.
+    The spool-line rule, which every spool reader (``fetch``, the simple
+    reader's ``readBetweenOffsets``, ``AMQPScaleOutStreamReader``,
+    ``AMQPBatchReader``) applies through ``_parse_spool_lines``: a message
+    is one newline-terminated line (the terminated prefix splits as
+    ``bytes.splitlines`` does), decoded as UTF-8 with invalid bytes
+    replaced, parsed as a JSON object.  A blank line is skipped; a
+    malformed or non-object line is dropped (``fetch`` counts it in
+    ``malformed``); bytes after a file's last newline stay unread until
+    their newline arrives.
 
-    ``fetch`` tail-reads incrementally: a per-file byte high-water mark
-    means each appended line is read and parsed exactly once over the
-    stream's lifetime — O(new data) per micro-batch, not O(total spool)
-    (the previous full-rescan was quadratic over a long-running stream).
-    Files must be appended in non-decreasing filename order (a new file
-    sorting before an already-consumed one would be read late — same
-    contract a broker's FIFO link gives the reference's receiver).
+    ``cursor`` maps each file to the byte just past what ``fetch`` took
+    (a file at byte 0 is absent); ``fetch(max_n)`` reads on from it, each
+    line parsed once, and stops after the line that brings it to ``max_n``
+    messages.  The cursor lands only just after a newline (a line split at
+    a bare CR is taken whole: the cap is exceeded only by its extra
+    messages), so ``_spool_range_batches`` between two cursors returns
+    exactly what ``fetch`` returned.  Files are appended in non-decreasing
+    name order (a FIFO link's contract); one sorting earlier is read late.
     """
 
     def __init__(self, spool_dir: str):
         self.spool_dir = spool_dir
-        self.consumed = 0
         # Converter-crash semantics (SURVEY §7.4.2): the reference's
         # unreliable path throws on an unconvertible message
         # (AMQPReceiver.scala:161) while the reliable path silently drops
         # (ReliableAMQPReceiver.scala:127).  The resolved semantic here:
         # drop AND count — the stream never dies, the loss is observable.
         self.malformed = 0
-        self._offsets: dict[str, int] = {}  # path -> next unread byte
-        self._pending: deque[dict] = deque()
-        self._to_skip = 0  # checkpoint fast-forward debt (see skip())
-
-    def _poll(self) -> None:
-        """Read only bytes appended since the last poll.  Only complete
-        (newline-terminated) lines are consumed; a partially-flushed tail
-        stays unread — its offset un-advanced — until its newline arrives,
-        so a mid-write poll can never parse half a message."""
-        for path in _spool_files(self.spool_dir):
-            off = self._offsets.get(path, 0)
-            if os.path.getsize(path) <= off:
-                continue
-            with open(path, "rb") as f:
-                f.seek(off)
-                data = f.read()
-            self._offsets[path] = off + data.rfind(b"\n") + 1
-            msgs, malformed = _parse_spool_lines(data)
-            self._pending.extend(msgs)
-            self.malformed += malformed
-
-    def skip(self, n: int) -> None:
-        """Checkpoint-recovery fast-forward: drop the next ``n`` messages
-        (the committed prefix) without surfacing them.  Messages not yet
-        on disk are skipped as they arrive."""
-        self._to_skip += n
-        self.consumed += n
+        self.cursor: dict[str, int] = {}
 
     def fetch(self, max_n: int) -> list[dict]:
-        self._poll()
-        while self._to_skip and self._pending:
-            self._pending.popleft()
-            self._to_skip -= 1
-        if self._to_skip:
-            return []
-        n = min(max_n, len(self._pending))
-        batch = [self._pending.popleft() for _ in range(n)]
-        self.consumed += n
-        return batch
-
-    def replay(self, start: int, end: int) -> list[dict]:
-        """Full-rescan slow path for offset-range replay after a restart
-        (≡ WAL block re-read); leaves the incremental cursor and the
-        malformed counter untouched.  Files before ``start`` are parsed
-        only to count their messages; only the ``[start, end)`` messages
-        are kept.  Stops after the file that brings the count to ``end``."""
         out: list[dict] = []
-        seen = 0  # messages in the files already read
-        for path in _spool_files(self.spool_dir):
-            if seen >= end:
+        sizes = {p: os.path.getsize(p) for p in _spool_files(self.spool_dir)}
+        for path, pos, size in _ranges_between(self.cursor, sizes):
+            if len(out) >= max_n:
                 break
-            with open(path, "rb") as f:
-                msgs = _parse_spool_lines(f.read(_complete_bytes(path)))[0]
-            out += msgs[max(start - seen, 0) : end - seen]
-            seen += len(msgs)
+            for msgs, malformed, pos in _spool_blocks(
+                path, pos, size, max_n - len(out)
+            ):
+                out += msgs
+                self.malformed += malformed
+            if pos:
+                self.cursor[path] = pos
         return out
 
 
@@ -526,13 +517,14 @@ class QpidTransport(Transport):
 class AMQPStreamReader(SimpleDataSourceStreamReader):
     """Offset/commit protocol over a Transport.
 
-    Offset = {"seq": total messages admitted}.  ``read`` keeps no copy
-    of a batch (Spark's prefetch cache does, until commit); ``commit``
-    settles the messages below its offset (≡ store-then-ack,
+    Offset = {"seq": total messages admitted}, plus a spool's byte cursor
+    ``"files"`` (``SpoolTransport.cursor``).  ``read`` keeps no copy of a
+    batch (Spark's prefetch cache does, until commit); ``commit`` settles
+    the messages below its offset (≡ store-then-ack,
     ReliableAMQPReceiver.scala:111-159).  After a restart a fresh reader's
-    ``readBetweenOffsets`` replays (≡ WAL block replay): the spool replays
-    the range exactly once, a live link nothing — the broker redelivers
-    what was never settled (at least once).
+    ``readBetweenOffsets`` re-reads the stored block (≡ WAL block replay):
+    the spool the byte ranges between the two cursors, exactly once, a live
+    link nothing — the broker redelivers what was never settled.
     """
 
     def __init__(self, options: dict):
@@ -573,27 +565,15 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
         self._settled = 0  # messages below this seq are settled
 
     def initialOffset(self) -> dict:
-        return {"seq": 0}
-
-    def _fetch_with_reconnect(self, max_n: int) -> list[dict]:
-        """transport.fetch with restart-on-disconnect (≡ the reference's
-        Receiver.restart on close/disconnect, AMQPReceiver.scala:121-151):
-        exponential backoff, then transport.reconnect() and retry.  A
-        broker that redelivers the in-flight tail yields duplicates, the
-        same at-least-once guarantee as the reference's WAL path."""
-        return _retry_on_disconnect(
-            lambda: self.transport.fetch(max_n), self.transport.reconnect
-        )
+        return {"seq": 0, "files": {}} if self._replayable else {"seq": 0}
 
     def read(self, start: dict) -> tuple[Iterator, dict]:
-        # Restart resync (≡ checkpoint recovery via StreamingContext.
-        # getOrCreate, AMQPTemperature.scala:61): a fresh reader starts at
-        # seq 0 but Spark hands us the checkpointed offset, below which
-        # everything is committed and settled.  A spool fast-forwards past
-        # that prefix; a live link's broker holds none of it.
+        # Restart resync (≡ StreamingContext.getOrCreate,
+        # AMQPTemperature.scala:61): a fresh reader is handed the checkpointed
+        # offset, below which all is settled; a spool takes up its cursor.
         if start["seq"] > self._seq:
             if self._replayable:
-                self.transport.skip(start["seq"] - self._seq)
+                self.transport.cursor = dict(_spool_cursor(start))
             self._seq = self._settled = start["seq"]
         if self.transport is None:
             o = self.options
@@ -616,28 +596,34 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
             admit = min(admit, max(1, int(self.max_rate * elapsed)))
         if self.target_batch_s:
             admit = min(admit, self._adaptive_cap)
-        rows = [_msg_to_row(m) for m in self._fetch_with_reconnect(admit)]
+        # at least once: a broker redelivers what was in flight at a drop
+        msgs = _retry_on_disconnect(
+            lambda: self.transport.fetch(admit), self.transport.reconnect
+        )
+        rows = [_msg_to_row(m) for m in msgs]
+        if not rows:  # an unchanged offset plans no (empty) micro-batch
+            return iter(()), start
         self._seq += len(rows)
         if not self.reliable:  # the transport settled them on receive
             self._settled = self._seq
-        if self.target_batch_s and rows:
+        if self.target_batch_s:
             # commit(end) closes this sample into a processing duration;
             # bound the map in case an epoch is never committed (restart)
             self._batch_done[self._seq] = (time.monotonic(), len(rows))
             while len(self._batch_done) > 64:
                 self._batch_done.pop(next(iter(self._batch_done)))
-        # One RecordBatch, or none: Spark's prefetch cache holds it until
-        # commit, and an element yielded with an unchanged offset would be
-        # OFFSET_DID_NOT_ADVANCE.
-        out = iter([_rows_to_arrow_batch(rows)] if rows else ())
-        return out, {"seq": self._seq}
+        # One RecordBatch: Spark's prefetch cache holds it until commit.
+        end = {"seq": self._seq}
+        if self._replayable:
+            end["files"] = dict(self.transport.cursor)
+        return iter([_rows_to_arrow_batch(rows)]), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         if not self._replayable:
             return iter(())  # the broker redelivers the unsettled tail
-        msgs = self.transport.replay(start["seq"], end["seq"])
-        rows = [_msg_to_row(m) for m in msgs]
-        return iter([_rows_to_arrow_batch(rows)] if rows else ())
+        return _spool_range_batches(
+            _ranges_between(_spool_cursor(start), _spool_cursor(end))
+        )
 
     def commit(self, end: dict) -> None:
         upto = end["seq"]
@@ -666,6 +652,34 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
                 self._adaptive_cap = min(
                     self.max_per_batch, max(self._adaptive_cap * 2, 1)
                 )
+
+    def stop(self) -> None:
+        if self.transport is not None:
+            self.transport.close()
+
+
+class _StoppableSimpleReaderWrapper(_SimpleStreamReaderWrapper):
+    """PySpark's prefetch-and-cache wrapper, plus the ``stop()`` it does
+    not forward, so a stopped query closes its live link."""
+
+    def stop(self) -> None:
+        self.simple_reader.stop()
+
+
+def _spool_cursor(offset: dict) -> dict[str, int]:
+    """The ``{path: byte}`` cursor of a simple spool reader's offset."""
+    if "files" not in offset:  # a checkpoint from before the cursor format
+        raise ValueError(
+            f"spool offset {json.dumps(offset)} predates the offset format "
+            '{"seq": n, "files": {path: byte}}; restart from a new checkpoint'
+        )
+    return offset["files"]
+
+
+def _ranges_between(lo: dict, hi: dict) -> list[tuple[str, int, int]]:
+    """The ``(path, lo, hi)`` ranges between two ``{path: byte}`` cursors,
+    in file order; a file absent from ``lo`` starts at byte 0."""
+    return [(p, lo.get(p, 0), b) for p, b in sorted(hi.items()) if b > lo.get(p, 0)]
 
 
 def _complete_bytes(path: str, upto: int | None = None, chunk: int = 1 << 16) -> int:
@@ -718,28 +732,18 @@ class _SpoolRangePartition(InputPartition):
         self.ranges = ranges
 
 
-SPOOL_READ_BYTES = 1 << 16  # read block of a range; bounds a task's memory
-
-
 def _spool_range_batches(ranges: list[tuple[str, int, int]]) -> Iterator:
-    """Newline-aligned ``(path, lo, hi)`` ranges → RecordBatches of
-    ``ARROW_ROWS_PER_BATCH`` rows (the last may be shorter) — columnar all
-    the way to the JVM (the tuple path's per-row converter loop dominated
-    the measured per-batch cost).  A range is read in ``SPOOL_READ_BYTES``
-    blocks; a block's unterminated tail carries into the next block."""
+    """Newline-aligned ``(path, lo, hi)`` ranges, read by ``_spool_blocks``
+    → RecordBatches of ``ARROW_ROWS_PER_BATCH`` rows (the last may be
+    shorter): columnar all the way to the JVM (the tuple path's per-row
+    converter loop dominated the measured per-batch cost)."""
     buf: list[tuple] = []
     for path, lo, hi in ranges:
-        with open(path, "rb") as f:
-            f.seek(lo)
-            carry = b""
-            while lo < hi and (block := f.read(min(SPOOL_READ_BYTES, hi - lo))):
-                lo += len(block)
-                data = carry + block
-                carry = data[data.rfind(b"\n") + 1 :]
-                buf += map(_msg_to_row, _parse_spool_lines(data)[0])
-                while len(buf) >= ARROW_ROWS_PER_BATCH:
-                    yield _rows_to_arrow_batch(buf[:ARROW_ROWS_PER_BATCH])
-                    del buf[:ARROW_ROWS_PER_BATCH]
+        for msgs, _, _ in _spool_blocks(path, lo, hi):
+            buf += map(_msg_to_row, msgs)
+            while len(buf) >= ARROW_ROWS_PER_BATCH:
+                yield _rows_to_arrow_batch(buf[:ARROW_ROWS_PER_BATCH])
+                del buf[:ARROW_ROWS_PER_BATCH]
     if buf:
         yield _rows_to_arrow_batch(buf)
 
@@ -830,16 +834,11 @@ class AMQPScaleOutStreamReader(DataSourceStreamReader):
             for p, off in files.items():
                 if mine.get(p, 0) < off:
                     mine[p] = off
-        parts = []
-        for d in self.spool_dirs:
-            prev = start.get(d, {})
-            ranges = [
-                (p, prev.get(p, 0), hi)
-                for p, hi in end.get(d, {}).items()
-                if hi > prev.get(p, 0)
-            ]
-            if ranges:
-                parts.append(_SpoolRangePartition(ranges))
+        parts = [
+            _SpoolRangePartition(ranges)
+            for d in self.spool_dirs
+            if (ranges := _ranges_between(start.get(d, {}), end.get(d, {})))
+        ]
         return parts or [_SpoolRangePartition([])]
 
     def read(self, partition: _SpoolRangePartition) -> Iterator:
@@ -1032,7 +1031,7 @@ class AMQPWriter(DataSourceWriter, DataSourceStreamWriter):
 
     Live (``transport=qpid``): each task opens a ``QpidSender`` and
     publishes row-by-row with reconnect-on-disconnect (same backoff policy
-    as the reader's ``_fetch_with_reconnect``).  AMQP has no cross-message
+    as the reader's fetch, ``_retry_on_disconnect``).  AMQP has no cross-message
     transaction, so the live sink is at-least-once: ``commit`` is a no-op
     and a retried task may re-send its partition — the same contract as
     the source side.  The reference has no sink at all (ingestion-only
@@ -1052,10 +1051,10 @@ class AMQPWriter(DataSourceWriter, DataSourceStreamWriter):
             self.spool_dir = options["spooldir"]
         # Batch publishes must not collide: each .save() finalizes under a
         # unique job epoch (override with option epoch=… for deterministic
-        # names).  Streaming epochs are e<batchId>, stable across restarts
-        # so a replayed epoch re-renames onto the same files (idempotent);
-        # two streaming queries sharing one spooldir must therefore pass
-        # distinct queryName=… options to namespace their epochs.
+        # names).  Streaming epochs are e<batchId> (zero-padded), stable
+        # across restarts so a replayed epoch re-renames onto the same files
+        # (idempotent); two streaming queries sharing one spooldir must
+        # therefore pass distinct queryName=… options to namespace epochs.
         self.batch_epoch = options.get("epoch") or f"b{uuid.uuid4().hex[:12]}"
         self.query_prefix = options.get("queryname", "")
 
@@ -1129,7 +1128,9 @@ class AMQPWriter(DataSourceWriter, DataSourceStreamWriter):
             epoch = self.batch_epoch
         else:
             prefix = f"{self.query_prefix}-" if self.query_prefix else ""
-            epoch = f"{prefix}e{batchId}"
+            # zero-padded to a Java long's 19 digits: names sort in batch
+            # order, the spool's consumption order
+            epoch = f"{prefix}e{batchId:019d}"
         self._finalize(messages, epoch)
 
     def abort(self, messages, batchId=None) -> None:
@@ -1153,13 +1154,11 @@ class AMQPDataSource(DataSource):
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
         """Partitioned executor-side reader when ``spooldirs`` is given
-        (scale-out mode); otherwise signal Spark to fall back to the
-        driver-side simple reader below."""
+        (scale-out mode); otherwise the driver-side simple reader below in
+        PySpark's prefetch-and-cache wrapper."""
         if dict(self.options).get("spooldirs"):
             return AMQPScaleOutStreamReader(dict(self.options))
-        raise PySparkNotImplementedError(
-            errorClass="NOT_IMPLEMENTED", messageParameters={"feature": "streamReader"}
-        )
+        return _StoppableSimpleReaderWrapper(self.simpleStreamReader(schema))
 
     def simpleStreamReader(self, schema: StructType) -> AMQPStreamReader:
         return AMQPStreamReader(dict(self.options))

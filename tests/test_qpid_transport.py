@@ -293,3 +293,33 @@ def test_replay_only_reader_opens_no_link(proton_stub):
     r.read(r.initialOffset())
     r.read({"seq": 2})
     assert len(FakeConnection.instances) == 1
+
+
+def test_stop_closes_live_link(proton_stub):
+    """Spark's source runner calls ``stop()`` on the reader it built through
+    ``_streamReader`` when a query ends; the simple reader's wrapper
+    forwards it, which closes an opened link, and a reader that never
+    opened one stops cleanly."""
+    from pyspark.sql.datasource_internal import (
+        _SimpleStreamReaderWrapper,
+        _streamReader,
+    )
+
+    from streaming_amqp_spark.envelope import ENVELOPE_SCHEMA
+    from streaming_amqp_spark.sources.amqp import AMQPDataSource
+
+    def build():
+        source = AMQPDataSource({"transport": "qpid", "address": "q1"})
+        return _streamReader(source, ENVELOPE_SCHEMA)
+
+    idle = build()
+    assert isinstance(idle, _SimpleStreamReaderWrapper)
+    idle.stop()
+    assert FakeConnection.instances == []
+    FakeConnection.pending = _deliveries(2)
+    reader = build()
+    reader.latestOffset()
+    [conn] = FakeConnection.instances
+    assert not conn.closed
+    reader.stop()
+    assert conn.closed

@@ -6,6 +6,8 @@ and batch-read drop-and-count."""
 from __future__ import annotations
 
 import json
+import os
+import random
 import time
 
 import pytest
@@ -35,6 +37,25 @@ def _write_spool(tmp_path, messages, fname="000.jsonl"):
 
 def _msgs(n, start=0):
     return [{"message_id": f"m{i}", "body": str(i)} for i in range(start, start + n)]
+
+
+def _cursor(spool, *names):
+    """The byte cursor of a simple reader that has read ``names`` whole."""
+    return {f"{spool}/{n}": os.path.getsize(f"{spool}/{n}") for n in names}
+
+
+def _offsets_at(spool, *counts):
+    """Simple spool offsets after each running message count, taken by one
+    fetch cursor."""
+    t, seq, out = SpoolTransport(spool), 0, []
+    for n in counts:
+        seq += len(t.fetch(n - seq))
+        out.append({"seq": seq, "files": dict(t.cursor)})
+    return out
+
+
+def _ids(read_result):
+    return [row[0] for row in envelope_rows(read_result)]
 
 
 class FlakyTransport(SpoolTransport):
@@ -73,7 +94,7 @@ def test_reconnect_survives_transient_disconnect(tmp_path):
     r.transport = FlakyTransport(spool, fail_times=2)
     rows, off = r.read(r.initialOffset())
     assert len(envelope_rows(rows)) == 5
-    assert off == {"seq": 5}
+    assert off == {"seq": 5, "files": _cursor(spool, "000.jsonl")}
     assert r.transport.reconnects == 2
 
 
@@ -88,12 +109,13 @@ def test_reconnect_preserves_unsettled_buffer(tmp_path):
     _write_spool(tmp_path, _msgs(2, start=3), fname="001.jsonl")
     r.transport.fail_times = 1  # drop mid-stream before batch 2
     rows, off = r.read(off1)
-    assert len(envelope_rows(rows)) == 2 and off == {"seq": 5}
+    assert len(envelope_rows(rows)) == 2
+    assert off == {"seq": 5, "files": _cursor(spool, "000.jsonl", "001.jsonl")}
     assert r.transport.settled == []  # nothing settles before its commit
     r.commit(off1)
     r.commit(off)
     assert r.transport.settled == [3, 2]
-    assert len(envelope_rows(r.readBetweenOffsets({"seq": 0}, {"seq": 3}))) == 3
+    assert _ids(r.readBetweenOffsets(r.initialOffset(), off1)) == ["m0", "m1", "m2"]
 
 
 def test_reconnect_gives_up_after_max_attempts(tmp_path):
@@ -224,7 +246,6 @@ def test_spool_fetch_parses_each_line_once(tmp_path, monkeypatch):
     assert t.fetch(100) == []
     # 15 lines on disk, 4 fetches — exactly 15 parses, not 10+10+15+15
     assert calls["n"] == 15
-    assert t.consumed == 15
 
 
 def test_spool_fetch_ignores_partial_trailing_line(tmp_path):
@@ -245,25 +266,31 @@ def test_spool_fetch_ignores_partial_trailing_line(tmp_path):
 
 
 def test_spool_skip_fast_forwards_committed_prefix(tmp_path):
-    """Checkpoint recovery: a fresh transport skips the committed prefix,
-    even when part of it arrives only after the skip is requested."""
+    """Checkpoint recovery: a fresh reader handed a checkpointed offset takes
+    up its cursor and skips the committed prefix, even when that prefix
+    ends inside a file that grew after the first reader's earlier read;
+    the committed range still replays from the spool."""
     spool = _write_spool(tmp_path, _msgs(3))
-    t = SpoolTransport(spool)
-    t.skip(5)  # 3 on disk now, 2 more will arrive later
-    assert t.fetch(10) == []
+    first = _reader(spool)
+    _, off3 = first.read(first.initialOffset())
     _write_spool(tmp_path, _msgs(4, start=3), fname="001.jsonl")
-    assert [m["message_id"] for m in t.fetch(10)] == ["m5", "m6"]
-    assert t.consumed == 7
+    first.max_per_batch = 2
+    _, off5 = first.read(off3)
+    fresh = _reader(spool)
+    rows, end = fresh.read(off5)
+    assert _ids(rows) == ["m5", "m6"] and end["seq"] == 7
+    assert _ids(fresh.readBetweenOffsets(off3, off5)) == ["m3", "m4"]
 
 
 def test_spool_replay_rescans_full_range(tmp_path):
-    """replay() stays the full-rescan slow path and must not disturb the
-    incremental fetch cursor."""
+    """readBetweenOffsets re-reads a range from the spool and must not
+    disturb the incremental fetch cursor."""
     spool = _write_spool(tmp_path, _msgs(6))
-    t = SpoolTransport(spool)
-    assert len(t.fetch(4)) == 4
-    assert [m["message_id"] for m in t.replay(1, 3)] == ["m1", "m2"]
-    assert [m["message_id"] for m in t.fetch(10)] == ["m4", "m5"]
+    r = _reader(spool)
+    assert len(r.transport.fetch(4)) == 4
+    off1, off3 = _offsets_at(spool, 1, 3)
+    assert _ids(r.readBetweenOffsets(off1, off3)) == ["m1", "m2"]
+    assert [m["message_id"] for m in r.transport.fetch(10)] == ["m4", "m5"]
 
 
 @pytest.mark.parametrize(
@@ -273,20 +300,207 @@ def test_spool_replay_rescans_full_range(tmp_path):
          "two-boundaries", "all", "past-end", "beyond-all", "empty"],
 )
 def test_spool_replay_range_matches_fetch_order(tmp_path, start, end):
-    """replay(start, end) across a multi-file spool returns exactly
-    fetch's messages [start, end), whether the range begins in a later
-    file or spans file boundaries; malformed lines in skipped files do
-    not shift the count."""
+    """readBetweenOffsets between the offsets after ``start`` and ``end``
+    messages of a multi-file spool returns exactly fetch's messages
+    [start, end), whether the range begins in a later file or spans file
+    boundaries; malformed lines in earlier files do not shift it."""
     _write_spool(tmp_path, _msgs(3), fname="000.jsonl")
     spool = _write_spool(tmp_path, _msgs(4, start=3), fname="001.jsonl")
     with open(f"{spool}/001.jsonl", "a") as f:
         f.write("{not json\n\n")
     _write_spool(tmp_path, _msgs(5, start=7), fname="002.jsonl")
-    fetched = SpoolTransport(spool).fetch(100)
+    fetched = [m["message_id"] for m in SpoolTransport(spool).fetch(100)]
     assert len(fetched) == 12
-    t = SpoolTransport(spool)
-    assert t.replay(start, end) == fetched[start:end]
-    assert t.malformed == 0 and t.consumed == 0
+    r = _reader(spool)
+    lo, hi = _offsets_at(spool, start, end)
+    assert _ids(r.readBetweenOffsets(lo, hi)) == fetched[start:end]
+    assert r.transport.malformed == 0 and r.transport.cursor == {}
+
+
+def test_spool_offset_without_cursor_is_refused(tmp_path):
+    """A spool offset of the count-only format ({"seq": n}, from a
+    checkpoint written before offsets held the byte cursor) is refused
+    with an error that names the format, never recounted."""
+    spool = _write_spool(tmp_path, _msgs(5))
+    r = _reader(spool)
+    with pytest.raises(ValueError, match='"files": {path: byte}'):
+        r.readBetweenOffsets({"seq": 0}, {"seq": 3})
+    with pytest.raises(ValueError, match='"files": {path: byte}'):
+        r.read({"seq": 3})
+
+
+def test_malformed_only_read_keeps_cursor_offset(tmp_path):
+    """A read that admits nothing returns its start offset itself, so a
+    malformed-only tail plans no micro-batch; its lines are counted once
+    and the next message's offset moves past them."""
+    spool = _write_spool(tmp_path, _msgs(2))
+    r = _reader(spool)
+    _, off = r.read(r.initialOffset())
+    with open(f"{spool}/000.jsonl", "a") as f:
+        f.write("{not json\n[1, 2]\n")
+    rows, end = r.read(off)
+    assert end is off and list(rows) == []
+    assert r.transport.malformed == 2
+    _write_spool(tmp_path, _msgs(1, start=2), fname="001.jsonl")
+    rows, end = r.read(off)
+    assert _ids(rows) == ["m2"] and r.transport.malformed == 2
+    assert end == {"seq": 3, "files": _cursor(spool, "000.jsonl", "001.jsonl")}
+
+
+def _random_spool(rng, spool, long_line):
+    """A seeded random multi-file spool in the line forms the spool-line
+    rule covers.  Returns the malformed lines planted in the terminated
+    prefixes, the count ``malformed`` must reach."""
+    os.makedirs(spool)
+    planted = 0
+    for fi in range(rng.randint(1, 4)):
+        data, starts_bad = b"", []
+        for k in range(rng.randint(0, 40)):
+            kind = rng.random()
+            mid = f"f{fi}-{k}"
+            if kind < 0.55:
+                piece = json.dumps({"message_id": mid, "body": str(k)}).encode()
+            elif kind < 0.62:  # invalid UTF-8 inside a valid object
+                piece = b'{"message_id": "%s", "body": "caf\xff"}' % mid.encode()
+            elif kind < 0.70:
+                piece = rng.choice([b"", b"   ", b"\t"])
+            elif kind < 0.80:
+                piece = rng.choice([b"{not json", b'{"message_id": "x', b"\xfe\xff"])
+                starts_bad.append(len(data))
+            elif kind < 0.90:
+                piece = rng.choice([b'"a bare string"', b"[1, 2]", b"42", b"null"])
+                starts_bad.append(len(data))
+            elif long_line and kind < 0.92:  # longer than a read block
+                body = "x" * (70_000 if long_line == "block" else 200)
+                piece = json.dumps({"message_id": mid, "body": body}).encode()
+            else:
+                piece = json.dumps({"message_id": mid}).encode()
+            # a bare CR never follows a bare CR: a \n-line holds <= 2 pieces
+            ends = [b"\n", b"\r\n"] + ([b"\r"] if not data.endswith(b"\r") else [])
+            data += piece + rng.choice(ends)
+        if data and rng.random() < 0.4:  # torn tail
+            data += rng.choice([b'{"message_id": "torn"', b"{not json", b"x\r"])
+        last_nl = data.rfind(b"\n")
+        planted += sum(1 for s in starts_bad if s < last_nl)
+        with open(os.path.join(spool, f"{fi:03d}.jsonl"), "wb") as f:
+            f.write(data)
+    return planted
+
+
+@pytest.mark.parametrize("block", [64, 1 << 16], ids=["64B", "64KiB"])
+def test_spool_cursor_matches_parse_and_replay(tmp_path, monkeypatch, block):
+    """Differential check of the simple reader's byte cursor on seeded
+    random spools (CR, CRLF and bare-CR line ends, invalid UTF-8, blank,
+    malformed and non-object lines, torn tails, lines longer than a read
+    block), fetched in random caps: the batches concatenate to
+    ``_parse_spool_lines`` over each file's terminated prefix; each batch
+    equals ``readBetweenOffsets`` of its offsets; a fresh reader handed a
+    batch's end offset continues with exactly the next batch; and
+    ``malformed`` counts each planted line once."""
+    import streaming_amqp_spark.sources.amqp as amqp_mod
+
+    monkeypatch.setattr(amqp_mod, "SPOOL_READ_BYTES", block)
+    for seed in range(25):
+        rng = random.Random(seed)
+        spool = str(tmp_path / f"spool{seed}")
+        planted = _random_spool(rng, spool, "block" if block > 64 else "short")
+        want = []
+        for p in amqp_mod._spool_files(spool):
+            with open(p, "rb") as f:
+                msgs = amqp_mod._parse_spool_lines(f.read())[0]
+            want += [m.get("message_id") for m in msgs]
+
+        r = _reader(spool)
+        offsets, batches, caps = [r.initialOffset()], [], []
+        while True:
+            caps.append(rng.randint(1, 7))
+            r.max_per_batch = caps[-1]
+            rows, end = r.read(offsets[-1])
+            if end == offsets[-1]:
+                assert list(rows) == []
+                break
+            batches.append(_ids(rows))
+            offsets.append(end)
+        ctx = f"seed {seed}"
+        assert [i for b in batches for i in b] == want, ctx
+        assert r.transport.malformed == planted, ctx
+        for k, batch in enumerate(batches):
+            # a batch fills its cap, exceeded only by one bare-CR line
+            assert len(batch) <= caps[k] + 1, ctx
+            if k + 1 < len(batches):
+                assert len(batch) >= caps[k], ctx
+            replay = _reader(spool).readBetweenOffsets(offsets[k], offsets[k + 1])
+            assert _ids(replay) == batch, ctx
+            fresh = _reader(spool)
+            fresh.max_per_batch = caps[k + 1]
+            rows, end = fresh.read(offsets[k + 1])
+            nxt = batches[k + 1] if k + 1 < len(batches) else []
+            assert _ids(rows) == nxt, ctx
+            assert end == offsets[min(k + 2, len(batches))], ctx
+
+
+def _twenty_file_spool(tmp_path):
+    """1000 messages in 20 files, and the offsets after the 970th and the
+    1000th, written out from the file bytes."""
+    names = [f"{fi:03d}.jsonl" for fi in range(20)]
+    for fi, name in enumerate(names):
+        spool = _write_spool(tmp_path, _msgs(50, start=50 * fi), fname=name)
+    late = _cursor(spool, *names[:19])
+    with open(f"{spool}/019.jsonl", "rb") as f:
+        late[f"{spool}/019.jsonl"] = len(b"".join(f.readlines()[:20]))
+    end = {"seq": 1000, "files": _cursor(spool, *names)}
+    return spool, {"seq": 970, "files": late}, end
+
+
+def _count_parses(monkeypatch):
+    import streaming_amqp_spark.sources.amqp as amqp_mod
+
+    calls = {"n": 0}
+    real = amqp_mod._parse_spool_line
+
+    def counting(line):
+        calls["n"] += 1
+        return real(line)
+
+    monkeypatch.setattr(amqp_mod, "_parse_spool_line", counting)
+    return calls
+
+
+def test_restart_replay_parses_only_its_range(tmp_path, monkeypatch):
+    """A restarted reader's replay of the last 30 of 1000 messages on a
+    20-file spool parses the 30 lines of its byte range, not the stream
+    before it: restart cost is O(range), counted without a clock."""
+    spool, lo, hi = _twenty_file_spool(tmp_path)
+    assert [lo, hi] == _offsets_at(spool, 970, 1000)
+    calls = _count_parses(monkeypatch)
+    ids = _ids(_reader(spool).readBetweenOffsets(lo, hi))
+    assert ids == [f"m{i}" for i in range(970, 1000)]
+    assert calls["n"] == 30
+
+
+def test_restart_read_parses_only_after_cursor(tmp_path, monkeypatch):
+    """A fresh reader's first read at a late checkpointed offset parses only
+    the lines after the offset's cursor."""
+    spool, late, _ = _twenty_file_spool(tmp_path)
+    calls = _count_parses(monkeypatch)
+    rows, end = _reader(spool).read(late)
+    assert _ids(rows) == [f"m{i}" for i in range(970, 1000)] and end["seq"] == 1000
+    assert calls["n"] == 30
+
+
+def test_sink_epochs_sort_in_batch_order(tmp_path):
+    """A stream the spool sink published across twelve epochs reads back
+    in epoch order: epoch 10's files must not sort between epoch 1's and
+    epoch 2's.  Each epoch is one task write plus the driver's
+    ``commit(messages, batchId)``, the calls Spark makes per micro-batch."""
+    out = str(tmp_path / "sink")
+    w = AMQPWriter({"transport": "spool", "spooldir": out})
+    for batch_id in range(12):
+        row = {"message_id": f"m{batch_id}", "body": str(batch_id)}
+        w.commit([w.write(iter([row]))], batch_id)
+    r = _reader(out)
+    rows, _ = r.read(r.initialOffset())
+    assert _ids(rows) == [f"m{i}" for i in range(12)]
 
 
 def test_batch_read_drops_malformed_lines(spark, tmp_path):
@@ -312,7 +526,9 @@ def _ids_via_fetch(spool):
 
 
 def _ids_via_replay(spool):
-    return [m["message_id"] for m in SpoolTransport(spool).replay(0, 100)]
+    first = _reader(spool)
+    _, end = first.read(first.initialOffset())
+    return _ids(_reader(spool).readBetweenOffsets(first.initialOffset(), end))
 
 
 def _ids_via_scaleout(spool):

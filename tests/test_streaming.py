@@ -6,6 +6,7 @@ ProtonServer harness (AMQPTestUtils.scala:66-91,213-266)."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -764,7 +765,9 @@ def test_unreliable_mode_settles_on_receive(amqp, tmp_path):
     )
     r.transport = RecordingTransport(spool)
     rows, end = r.read(r.initialOffset())
-    assert len(envelope_rows(rows)) == 5 and end == {"seq": 5}
+    path = f"{spool}/000.jsonl"
+    assert end == {"seq": 5, "files": {path: os.path.getsize(path)}}
+    assert len(envelope_rows(rows)) == 5
     r.commit(end)
     assert r.transport.settled == []  # settled on receive, not at commit
 
