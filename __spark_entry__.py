@@ -76,6 +76,16 @@ _MODULES = (
 # shapes (their r11 verdicts are green and their code is unchanged
 # since).  agg_percentiles (group-key fan-out, r16) displaces
 # scalar_date_funcs on the same rule.
+# One-product-quantizer swaps: the fixed PQ codebook now encodes
+# through the trained path's encoder, query table and ADC, and one
+# recall fold serves every ANN panel, so ann_two_stage_recall,
+# ann_pq_recall, ann_ivf_recall, ann_ivf_kmeans_recall,
+# ann_pq_kmeans_codebook and ann_pq_kmeans_recall_indexed (which reads
+# pq_kmeans_recall_from) displace scalar_array_funcs,
+# scalar_conditional_funcs, scalar_string_funcs, multimodal_meta,
+# multimodal_resize and multimodal_frame_sample — untouched names whose
+# latest verdict (r16, green) is the freshest in the ledger
+# (`tools/freshness.py`).
 _FIRST_50 = (
     # r15-touched, unrotated then (VERDICT r15 #2) — several re-touched
     # this round
@@ -86,10 +96,8 @@ _FIRST_50 = (
     # r11-stale (latest verdict is r11) at r16
     "dedup_chunk_cdc", "dedup_minhash_recall", "events_sessionize_30m",
     "knn_cosine_topk", "multimodal_decode_features",
-    "multimodal_frame_sample", "multimodal_meta", "multimodal_resize",
     "pack_docs_nextfit", "pii_mask_events", "profile_table",
-    "scalar_array_funcs", "scalar_conditional_funcs",
-    "scalar_string_funcs", "text_bigram_counts", "text_chunk_sliding",
+    "text_bigram_counts", "text_chunk_sliding",
     "text_doc_frequency", "text_encode_tokens", "text_fingerprint",
     "text_lang_id", "text_quality_score", "text_simhash",
     "text_token_stats", "text_winnowing_fingerprints",
@@ -104,6 +112,10 @@ _FIRST_50 = (
     # guard moved into fan_out (narrow-scan repartition only)
     "basket_brand_pairs", "brand_graph_pagerank", "text_repetition_stats",
     "contamination_check", "curate_documents",
+    # one product quantizer; one recall fold
+    "ann_two_stage_recall", "ann_pq_recall", "ann_ivf_recall",
+    "ann_ivf_kmeans_recall", "ann_pq_kmeans_codebook",
+    "ann_pq_kmeans_recall_indexed",
 )
 
 

@@ -463,25 +463,29 @@ WHERE a.vec_id < b.vec_id
 """
 
 
+def _recall_at_k(exact: DataFrame, found: DataFrame) -> DataFrame:
+    """(query_id, n_hit, recall_at_k): how many of each query's exact
+    top-k neighbours ``found`` (query_id, neighbor_id) holds — the one
+    recall fold every ANN panel reports (k = KNN_K = PQ_TOPK)."""
+    hit = found.select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    n_hit = F.count("hit")
+    return (
+        exact.join(hit, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            n_hit.alias("n_hit"),
+            (n_hit.cast("double") / F.lit(float(KNN_K))).alias("recall_at_k"),
+        )
+    )
+
+
 def ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the IVF path against the exact brute-force baseline —
     the measurement every ANN deployment needs before trading exactness
     for the K× scan reduction.  Both inputs are deterministic, so recall
     itself is oracle-checkable (rare for ANN evaluation)."""
-    exact = knn_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
-    approx = ann_ivf_topk(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hit"),
-            (
-                F.sum(F.coalesce("hit", F.lit(0))).cast("double")
-                / F.lit(float(KNN_K))
-            ).alias("recall_at_k"),
-        )
+    return _recall_at_k(
+        knn_cosine_topk(spark, sf_dir), ann_ivf_topk(spark, sf_dir)
     )
 
 
@@ -580,168 +584,171 @@ def _sub_l2sq_sql(e: str, c: str, m_expr: str) -> str:
     )
 
 
-def _pq_fixed_cb(emb: DataFrame):
-    """The fixed deterministic codebook (sub-vectors of the first PQ_K
-    vectors) as ONE broadcastable sorted row — shared by ann_pq_adc and
-    ann_two_stage_recall."""
+def _code_l2sq(e, cvec, m):
+    """Squared L2 between subspace ``m`` (an int or an int column) of a
+    64-dim array and an 8-dim code vector ``cvec``: the squared
+    differences zipped over the subspace slice, folded left from a 0.0
+    seed.  The seed is an IEEE identity on non-negative squares and the
+    fold runs in array order, the left association the oracle's
+    ``_cvec_l2sq_sql`` chain spells, so every distance is bit-identical
+    to the oracle's.  The one distance the PQ encoder, Lloyd's
+    assignment and the query table all evaluate."""
+    return F.aggregate(
+        F.zip_with(
+            F.slice(e, m * PQ_SUB + 1, PQ_SUB),
+            cvec,
+            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _cvec_l2sq_sql(e: str, c: str, m_expr: str) -> str:
+    return " + ".join(
+        f"((CAST({e}[{m_expr} * {PQ_SUB} + {j}] AS DOUBLE) - {c}[{j}])"
+        f" * (CAST({e}[{m_expr} * {PQ_SUB} + {j}] AS DOUBLE) - {c}[{j}]))"
+        for j in range(1, PQ_SUB + 1)
+    )
+
+
+def _pq_init_codebook(emb: DataFrame) -> DataFrame:
+    """(m, code_id, cvec double[8]): the sub-vectors of the first PQ_K
+    vectors — the fixed codebook ann_pq_adc encodes with, and Lloyd's
+    starting point (so the fixed codebook is the trained one at zero
+    iterations)."""
+
+    def sub_of(m: int):
+        return F.transform(
+            F.sequence(F.lit(m * PQ_SUB + 1), F.lit(m * PQ_SUB + PQ_SUB)),
+            lambda i: F.element_at(F.col("embedding"), i).cast("double"),
+        )
+
     return (
         emb.where(F.col("vec_id") < PQ_K)
         .select(
-            F.col("vec_id").alias("code_id"), F.col("embedding").alias("cemb")
+            F.col("vec_id").cast("long").alias("code_id"),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(m).cast("long").alias("m"),
+                            sub_of(m).alias("cvec"),
+                        )
+                        for m in range(PQ_M)
+                    ]
+                )
+            ).alias("p"),
         )
-        .agg(
-            F.sort_array(F.collect_list(F.struct("code_id", "cemb"))).alias(
-                "cb"
-            )
-        )
+        .select("p.m", "code_id", "p.cvec")
     )
 
 
-def _pq_fixed_enc_frame(spark, sf_dir: str, cb):
-    """The fixed-codebook PQ encode, shared by ann_pq_adc and
-    ann_two_stage_recall: returns the fanned-out corpus frame with the
-    bound per-code diff arrays (``_dall``) and the per-subspace argmin
-    builder.
+def _cb_subspace(m: int):
+    """Subspace ``m``'s codes out of _pq_assign's broadcast sorted
+    codebook column ``cb``.  On a FULL codebook (PQ_M*PQ_K entries —
+    one code_id set per subspace by construction, see
+    _pq_init_codebook) the (m, code_id) sort puts subspace m exactly at positions [m*PQ_K+1, PQ_K], so the
+    positional slice extracts PQ_K structs; a sub-PQ_K corpus (1-row
+    probe, round 11) falls back to the m-field filter, because there the
+    positional slice crosses subspace boundaries (wrong-dim distances,
+    NULL codes — the silent-wrong-answer class fixed in r11).  Both
+    branches select the IDENTICAL set whenever the codebook is full; the
+    CASE costs one array-length compare per row and keeps the hot path
+    from scanning all PQ_M*PQ_K entries per subspace (ADVICE r11 — the
+    unconditional field filter regressed the kmeans-recall family ~1.6×
+    warm at sf0.1)."""
+    return F.when(
+        F.size("cb") == PQ_M * PQ_K,
+        F.slice(F.col("cb"), m * PQ_K + 1, PQ_K),
+    ).otherwise(F.filter(F.col("cb"), lambda c: c["m"] == F.lit(m)))
 
-    Per-row evaluation restructured (r15, guide §4.1/§4.2 spirit — keep
-    the work in the cheapest JVM form): the old shape evaluated an
-    explicit PQ_SUB-term element_at chain inside the transform lambda
-    for every (code, subspace) pair — PQ_M×PQ_K chains of ~55
-    interpreted nodes per row (HOFs are CodegenFallback; ~20 µs/row).
-    Now the 64 per-dimension squared diffs are computed ONCE per (row,
-    code) as a bound column (zip_with — one tight HOF loop), and each
-    subspace argmin folds its 8-element slice (F.aggregate with a 0.0
-    seed).  Bit-parity: per-subspace sums associate exactly as the old
-    chain — slice folds are per-subspace, the 0.0 seed is an IEEE
-    identity on the non-negative squares, zip_with's element order is
-    array order — so every d (and therefore every code) is
-    bit-identical to the oracle's spelled chain (verified by exceptAll
-    on sf0.1 and the synthesized sf1: 0 diff rows).  Measured 1.55× on
-    the encode projection at 200k rows.
 
-    The ``_dall`` binding survives as its own Project (CollapseProject
-    keeps multi-referenced non-cheap aliases), so the diffs are not
-    re-inlined into the 8 argmin columns."""
-    dall = F.transform(
-        F.col("cb"),
-        lambda c: F.struct(
-            c["code_id"].cast("long").alias("k"),
-            F.zip_with(
-                F.col("embedding"),
-                c["cemb"],
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ).alias("dif"),
+def _pq_assign(emb: DataFrame, cb_rows: DataFrame) -> DataFrame:
+    """The PQ encoder: nearest code per (vector, subspace) against any
+    codebook in the (m, code_id, cvec) layout — fixed or trained, so
+    the encode, Lloyd's assignment and the index build and append all
+    run this one projection.  transform scores each code ONCE
+    (_code_l2sq); array_min's field-wise struct compare takes the
+    minimum distance and breaks ties to the lowest code_id (≡ the
+    oracle's ORDER BY d, code_id).  The codebook is one broadcast row,
+    so encoding is a pure projection over the corpus scan: sorted by
+    (m, code_id), subspace m occupies slice [m*PQ_K+1, PQ_K]."""
+    one = cb_rows.agg(
+        F.sort_array(F.collect_list(F.struct("m", "code_id", "cvec"))).alias(
+            "cb"
+        )
+    )
+    wc = emb.crossJoin(F.broadcast(one))
+
+    def best(m: int):
+        scored = F.transform(
+            _cb_subspace(m),
+            lambda c: F.struct(
+                _code_l2sq(F.col("embedding"), c["cvec"], m).alias("d"),
+                c["code_id"].alias("k"),
+            ),
+        )
+        return F.array_min(scored)["k"]
+
+    return wc.select(
+        "vec_id",
+        "embedding",
+        *[best(m).alias(f"code{m}") for m in range(PQ_M)],
+    )
+
+
+def pq_codes_long(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """PQ codes in long form (vec_id, m, code) — the encode pass the
+    persisted index stores so serving never re-runs it."""
+    return _pq_assign(emb, cb).selectExpr(
+        "vec_id",
+        "stack({n}, {args}) AS (m, code)".format(
+            n=PQ_M,
+            args=", ".join(f"{m}L, code{m}" for m in range(PQ_M)),
         ),
     )
-    bound = (
-        _emb_wide(spark, sf_dir)
-        .crossJoin(F.broadcast(cb))
-        .withColumn("_dall", dall)
-    )
-
-    def best_code(m: int):
-        scored = F.transform(
-            F.col("_dall"),
-            lambda s: F.struct(
-                F.aggregate(
-                    F.slice(s["dif"], m * PQ_SUB + 1, PQ_SUB),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                ).alias("d"),
-                s["k"].alias("k"),
-            ),
-        )
-        return F.array_min(scored)
-
-    return bound, best_code
 
 
-def _pq_fixed_enc_long(spark, sf_dir: str):
-    """Long-form (vec_id, m, code) fixed-codebook encode (see
-    _pq_fixed_enc_frame for the evaluation shape).
-
-    Session-cached: ann_pq_adc and ann_two_stage_recall (and through
-    them ann_pq_recall) consume the IDENTICAL code table — the
-    _exact_l2_topk discipline; in production these codes are exactly
-    what the persisted PQ index stores, so one encode pass per corpus
-    is the honest cost model.  The cached relation is N×PQ_M rows of
-    two longs.  The codebook is built internally (_pq_fixed_cb) so the
-    cache key cannot diverge from the relation it names."""
+def _pq_fixed(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(codebook, long-form codes) under the fixed codebook.  The codes
+    are session-cached: ann_pq_adc (and through it ann_pq_recall) and
+    ann_two_stage_recall read the IDENTICAL N×PQ_M code table — in
+    production exactly what the persisted PQ index stores, so one
+    encode pass per corpus is the honest cost model."""
     from streaming_amqp_spark.tables import shared_cache
 
-    def _build() -> DataFrame:
-        cb = _pq_fixed_cb(_emb(spark, sf_dir))
-        bound, best_code = _pq_fixed_enc_frame(spark, sf_dir, cb)
-        return bound.select(
-            "vec_id",
-            *[best_code(m)["k"].alias(f"code{m}") for m in range(PQ_M)],
-        ).selectExpr(
-            "vec_id",
-            "stack({n}, {args}) AS (m, code)".format(
-                n=PQ_M, args=", ".join(f"{m}, code{m}" for m in range(PQ_M))
-            ),
-        )
-
-    return shared_cache(spark, ("pq_fixed_enc_long", sf_dir), _build)
+    cb = _pq_init_codebook(_emb(spark, sf_dir))
+    enc = shared_cache(
+        spark,
+        ("pq_fixed_enc_long", sf_dir),
+        lambda: pq_codes_long(_emb_wide(spark, sf_dir), cb),
+    )
+    return cb, enc
 
 
-def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with asymmetric distance computation
-    (ADC), the memory-scale tier below IVF: each vector is compressed to
-    8 one-byte codes (nearest codebook entry per 8-dim subspace), and
-    queries score candidates by summing precomputed query-to-code
-    distances instead of touching raw vectors.
-
-    Codebook: the sub-vectors of the first PQ_K vectors (deterministic
-    sample — a k-means-trained codebook would drop in identically; the
-    assignment/ADC machinery is what's exercised here).
-
-    Scale shape: the codebook is ONE broadcast row, so encoding is a pure
-    projection (per-row argmin fold over 16 codes × 8 subspaces — zero
-    shuffle: at 100 TB, compressing the corpus is exactly a scan); the
-    query distance table (|Q|·8·16 rows) is broadcast, and the only
-    shuffles are the map-side-combined per-(query, vector) distance sum
-    and the per-query top-k window.  Sums of the 8 per-subspace distances
-    go through DECIMAL (order-independent) after round(6), the
-    functions.numeric convention.
-
-    Tie-breaks are deterministic everywhere: encoding folds codes in
-    ascending code_id with strict-less comparison (first minimum wins ≡
-    the oracle's ORDER BY d, code_id), ranking orders by (dist,
-    neighbor_id)."""
-    emb = _emb(spark, sf_dir)
-    # encode: fanned-out corpus, bound diff arrays, per-subspace slice
-    # folds — argmin per subspace via array_min on struct(d, k): minimum
-    # distance, ties to the lowest code_id, identical to the oracle's
-    # ORDER BY d, code_id (see _pq_fixed_enc_frame for the evaluation
-    # shape and the bit-parity argument); session-cached and shared with
-    # ann_two_stage_recall
-    enc = _pq_fixed_enc_long(spark, sf_dir)
+def _pq_query_dists(emb: DataFrame, cb: DataFrame) -> DataFrame:
+    """(query_id, m, code_id, qdist): each query's distance to every
+    code of its subspace, rounded to 6 — the |Q|·PQ_M·PQ_K-row ADC
+    lookup table, by the encoder's distance (_code_l2sq)."""
     q = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
-    cb_rows = emb.where(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").alias("code_id"), F.col("embedding").alias("cemb")
+    qdist = _code_l2sq(F.col("q_emb"), F.col("cvec"), F.col("m").cast("int"))
+    return q.crossJoin(F.broadcast(cb)).select(
+        "query_id", "m", "code_id", F.round(qdist, 6).alias("qdist")
     )
-    qd_cols = [
-        F.round(
-            _sub_l2sq_spark(F.col("q_emb"), F.col("cemb"), m), 6
-        ).alias(f"qd{m}")
-        for m in range(PQ_M)
-    ]
-    qd = (
-        q.crossJoin(F.broadcast(cb_rows))
-        .select("query_id", "code_id", *qd_cols)
-        .selectExpr(
-            "query_id",
-            "code_id",
-            "stack({n}, {args}) AS (m, qdist)".format(
-                n=PQ_M,
-                args=", ".join(f"{m}, qd{m}" for m in range(PQ_M)),
-            ),
-        )
-    )
+
+
+def _pq_adc_topk(
+    spark: SparkSession, sf_dir: str, cb: DataFrame, enc: DataFrame
+) -> DataFrame:
+    """Full-corpus ADC top-k (query_id, neighbor_id, rank, approx_dist)
+    over codebook ``cb`` and its long-form codes ``enc``: each stored
+    vector's distance is the sum of the query's table entries for its
+    codes, DECIMAL-exact after round(6) (the functions.numeric
+    convention), ranked by (dist, neighbor_id)."""
+    qd = _pq_query_dists(_emb(spark, sf_dir), cb)
     adc = (
         enc.join(
             F.broadcast(qd),
@@ -766,6 +773,31 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             "approx_dist",
         )
     )
+
+
+def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Product-quantization ANN with asymmetric distance computation
+    (ADC), the memory-scale tier below IVF: each vector is compressed to
+    8 one-byte codes (nearest codebook entry per 8-dim subspace), and
+    queries score candidates by summing precomputed query-to-code
+    distances instead of touching raw vectors.
+
+    Codebook: the sub-vectors of the first PQ_K vectors (deterministic
+    sample).  A k-means-trained codebook drops in identically:
+    ann_pq_kmeans_recall passes _pq_trained's codebook and codes
+    through the same encoder and the same ADC (_pq_adc_topk).
+
+    Scale shape: the codebook is ONE broadcast row, so encoding is a pure
+    projection (per-row argmin over 16 codes × 8 subspaces — zero
+    shuffle: at 100 TB, compressing the corpus is exactly a scan); the
+    query distance table (|Q|·8·16 rows) is broadcast, and the only
+    shuffles are the map-side-combined per-(query, vector) distance sum
+    and the per-query top-k window.
+
+    Tie-breaks are deterministic everywhere: encoding takes the minimum
+    distance with ties to the lowest code_id (≡ the oracle's ORDER BY
+    d, code_id), ranking orders by (dist, neighbor_id)."""
+    return _pq_adc_topk(spark, sf_dir, *_pq_fixed(spark, sf_dir))
 
 
 def _pq_oracle() -> str:
@@ -859,29 +891,16 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the PQ-ADC path against the exact L2 top-k baseline —
     the compression-loss measurement that decides the (M, K) codebook
     budget.  Both sides are deterministic, so the recall itself is
-    oracle-checked.  The exact side is the shared cached baseline
-    (_exact_l2_topk).
+    oracle-checked.  ann_pq_kmeans_recall is this panel under the
+    trained codebook: the two differ only in the codebook and codes
+    they pass to pq_kmeans_recall_from.
 
     Expectation note: the synthetic corpus's embeddings are i.i.d. random,
     the hardest case for PQ (no cluster structure for 8-byte codes to
     exploit) — measured recall here is low BY CONSTRUCTION, and that
     measurement is exactly what this operator exists to surface before a
     codebook ships."""
-    exact = _exact_l2_topk(spark, sf_dir)
-    approx = ann_pq_adc(spark, sf_dir).select(
-        "query_id", "neighbor_id", F.lit(1).alias("hit")
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hit"),
-            (
-                F.sum(F.coalesce("hit", F.lit(0))).cast("double")
-                / F.lit(float(PQ_TOPK))
-            ).alias("recall_at_k"),
-        )
-    )
+    return pq_kmeans_recall_from(spark, sf_dir, *_pq_fixed(spark, sf_dir))
 
 
 def _pq_recall_oracle() -> str:
@@ -1055,23 +1074,11 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         _l2sq_full_spark(F.col("q_emb"), F.col("embedding")).alias("d"),
     )
     wk = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-    found = (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= PQ_TOPK)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
+    found = scored.withColumn("rank", F.row_number().over(wk)).where(
+        F.col("rank") <= PQ_TOPK
     )
-    exact = _exact_l2_topk(spark, sf_dir)
     return (
-        exact.join(found, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hit"),
-            (
-                F.sum(F.coalesce("hit", F.lit(0))).cast("double")
-                / F.lit(float(PQ_TOPK))
-            ).alias("recall_at_k"),
-        )
+        _recall_at_k(_exact_l2_topk(spark, sf_dir), found)
         .join(ncand, "query_id")
         .select("query_id", "n_candidates", "n_hit", "recall_at_k")
     )
@@ -1264,9 +1271,9 @@ def ann_two_stage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the candidate scan reads only probed partitions); the ADC
     re-rank shuffles map-side-combined DECIMAL sums for candidate pairs
     only (|cands| ≪ N·Q).  The exact baseline exists to measure recall
-    and is dropped at scale.  The fixed deterministic codebook keeps the
-    oracle chain identical to ann_pq_adc's; the k-means-trained codebook
-    (_pq_train_kmeans) drops in without changing the shape."""
+    and is dropped at scale.  The re-rank reads ann_pq_adc's fixed
+    codebook, codes and query table; a trained codebook drops in
+    through the same encoder and _pq_query_dists."""
     emb = _emb(spark, sf_dir)
     # the coarse-probe centroid table is the same |labels|-row relation
     # ann_ivf_topk probes — session-cached (one posexplode corpus pass
@@ -1302,40 +1309,14 @@ def ann_two_stage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ncand = cand.groupBy("query_id").agg(
         F.count("*").alias("n_candidates")
     )
-    # PQ encoding + query distance table: identical to (and session-
-    # cache-shared with) ann_pq_adc — see _pq_fixed_enc_frame for the
-    # evaluation shape; everything else in this function stays on the
-    # narrow scan — the probe/cand sides are join-pruned
-    enc = _pq_fixed_enc_long(spark, sf_dir)
-    cb_rows = emb.where(F.col("vec_id") < PQ_K).select(
-        F.col("vec_id").alias("code_id"), F.col("embedding").alias("cemb")
-    )
-    qd = (
-        q.crossJoin(F.broadcast(cb_rows))
-        .select(
-            "query_id",
-            "code_id",
-            *[
-                F.round(
-                    _sub_l2sq_spark(F.col("q_emb"), F.col("cemb"), m), 6
-                ).alias(f"qd{m}")
-                for m in range(PQ_M)
-            ],
-        )
-        .selectExpr(
-            "query_id",
-            "code_id",
-            "stack({n}, {args}) AS (m, qdist)".format(
-                n=PQ_M, args=", ".join(f"{m}, qd{m}" for m in range(PQ_M))
-            ),
-        )
-    )
+    # fixed-codebook codes and query distance table: the ones
+    # ann_pq_adc reads (the codes session-cache-shared with it); the
+    # re-rank joins the codes of the shortlisted vectors only
+    cb, enc = _pq_fixed(spark, sf_dir)
+    qd = _pq_query_dists(emb, cb)
     adc = (
         cand.join(enc, "vec_id")
-        .join(
-            F.broadcast(qd),
-            ["query_id", "m"],
-        )
+        .join(F.broadcast(qd), ["query_id", "m"])
         .where(F.col("code") == F.col("code_id"))
         .groupBy("query_id", "vec_id")
         .agg(
@@ -1349,19 +1330,9 @@ def ann_two_stage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         adc.withColumn("rank", F.row_number().over(wk))
         .where(F.col("rank") <= PQ_TOPK)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .withColumn("hit", F.lit(1))
     )
-    exact = _exact_l2_topk(spark, sf_dir)
     return (
-        exact.join(shortlist, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hit"),
-            (
-                F.sum(F.coalesce("hit", F.lit(0))).cast("double")
-                / F.lit(float(PQ_TOPK))
-            ).alias("recall_at_k"),
-        )
+        _recall_at_k(_exact_l2_topk(spark, sf_dir), shortlist)
         .join(ncand, "query_id")
         .select("query_id", "n_candidates", "n_hit", "recall_at_k")
     )
@@ -1476,115 +1447,6 @@ GROUP BY e.query_id, n.n_candidates
 
 # ------------------------------------------- PQ k-means codebook training
 PQ_KM_ITERS = 2
-
-
-def _cvec_l2sq_spark(e, cvec, m: int):
-    """Squared L2 between subspace ``m`` of a 64-dim array and an 8-dim
-    codebook centroid, as the same left-associated chain as
-    ``_sub_l2sq_spark`` (spelled identically in the oracle)."""
-    terms = []
-    for j in range(1, PQ_SUB + 1):
-        d = F.element_at(e, m * PQ_SUB + j).cast("double") - F.element_at(
-            cvec, j
-        )
-        terms.append(d * d)
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def _cvec_l2sq_sql(e: str, c: str, m_expr: str) -> str:
-    return " + ".join(
-        f"((CAST({e}[{m_expr} * {PQ_SUB} + {j}] AS DOUBLE) - {c}[{j}])"
-        f" * (CAST({e}[{m_expr} * {PQ_SUB} + {j}] AS DOUBLE) - {c}[{j}]))"
-        for j in range(1, PQ_SUB + 1)
-    )
-
-
-def _pq_init_codebook(emb: DataFrame) -> DataFrame:
-    """(m, code_id, cvec double[8]): the sub-vectors of the first PQ_K
-    vectors — the same deterministic seed ann_pq_adc's fixed codebook
-    uses, now as Lloyd's starting point."""
-
-    def sub_of(m: int):
-        return F.transform(
-            F.sequence(F.lit(m * PQ_SUB + 1), F.lit(m * PQ_SUB + PQ_SUB)),
-            lambda i: F.element_at(F.col("embedding"), i).cast("double"),
-        )
-
-    return (
-        emb.where(F.col("vec_id") < PQ_K)
-        .select(
-            F.col("vec_id").cast("long").alias("code_id"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(m).cast("long").alias("m"),
-                            sub_of(m).alias("cvec"),
-                        )
-                        for m in range(PQ_M)
-                    ]
-                )
-            ).alias("p"),
-        )
-        .select("p.m", "code_id", "p.cvec")
-    )
-
-
-def _cb_onerow(cb_rows: DataFrame) -> DataFrame:
-    """The 128-row codebook as ONE broadcastable row, sorted by
-    (m, code_id) so subspace m occupies slice [m*PQ_K+1, PQ_K]."""
-    return cb_rows.agg(
-        F.sort_array(F.collect_list(F.struct("m", "code_id", "cvec"))).alias(
-            "cb"
-        )
-    )
-
-
-def _cb_subspace(m: int):
-    """Subspace ``m``'s codes out of the broadcast sorted codebook column
-    ``cb``.  On a FULL codebook (PQ_M*PQ_K entries — one code_id set per
-    subspace by construction, see _pq_init_codebook) the (m, code_id)
-    sort puts subspace m exactly at positions [m*PQ_K+1, PQ_K], so the
-    positional slice extracts PQ_K structs; a sub-PQ_K corpus (1-row
-    probe, round 11) falls back to the m-field filter, because there the
-    positional slice crosses subspace boundaries (wrong-dim distances,
-    NULL codes — the silent-wrong-answer class fixed in r11).  Both
-    branches select the IDENTICAL set whenever the codebook is full; the
-    CASE costs one array-length compare per row and keeps the hot path
-    from scanning all PQ_M*PQ_K entries per subspace (ADVICE r11 — the
-    unconditional field filter regressed the kmeans-recall family ~1.6×
-    warm at sf0.1)."""
-    return F.when(
-        F.size("cb") == PQ_M * PQ_K,
-        F.slice(F.col("cb"), m * PQ_K + 1, PQ_K),
-    ).otherwise(F.filter(F.col("cb"), lambda c: c["m"] == F.lit(m)))
-
-
-def _pq_assign(emb: DataFrame, cb_rows: DataFrame) -> DataFrame:
-    """Nearest-centroid code per (vector, subspace) against a trained
-    codebook: transform scores each code ONCE, array_min's field-wise
-    struct compare breaks ties to the lowest code_id (≡ the oracle's
-    ORDER BY d, code_id) — the _best_code convention."""
-    wc = emb.crossJoin(F.broadcast(_cb_onerow(cb_rows)))
-
-    def best(m: int):
-        scored = F.transform(
-            _cb_subspace(m),
-            lambda c: F.struct(
-                _cvec_l2sq_spark(F.col("embedding"), c["cvec"], m).alias("d"),
-                c["code_id"].alias("k"),
-            ),
-        )
-        return F.array_min(scored)["k"]
-
-    return wc.select(
-        "vec_id",
-        "embedding",
-        *[best(m).alias(f"code{m}") for m in range(PQ_M)],
-    )
 
 
 def _pq_train_kmeans(emb: DataFrame, iters: int = PQ_KM_ITERS) -> DataFrame:
@@ -1727,90 +1589,25 @@ def ann_pq_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook of ann_pq_recall at the driver/bench scales (0.30 vs 0.15
     at sf0.01, 0.225 vs 0.125 at sf0.1 — asserted by
     test_pq_kmeans_recall_beats_fixed; the 500-vector sf0.001 corpus is
-    inside sampling noise).  Same ADC shape as ann_pq_adc:
-    encoding is a pure scan against the broadcast codebook, the query
-    distance table is broadcast, DECIMAL-exact distance sums,
-    (dist, neighbor_id) tie-breaks.  The code table is read once by the
-    ADC join, so the encode pass runs inside this plan with no
-    materialization of its own."""
+    inside sampling noise).  The same encoder, query table, ADC and
+    recall fold as ann_pq_recall, under the trained codebook.  The code
+    table is read once by the ADC join, so the encode pass runs inside
+    this plan with no materialization of its own."""
     cb = _pq_trained(spark, sf_dir)
     enc = pq_codes_long(_emb_wide(spark, sf_dir), cb)
     return pq_kmeans_recall_from(spark, sf_dir, cb, enc)
 
 
-def pq_codes_long(emb: DataFrame, cb: DataFrame) -> DataFrame:
-    """PQ codes in long form (vec_id, m, code) — the encode pass the
-    persisted index stores so serving never re-runs it."""
-    return _pq_assign(emb, cb).selectExpr(
-        "vec_id",
-        "stack({n}, {args}) AS (m, code)".format(
-            n=PQ_M,
-            args=", ".join(f"{m}L, code{m}" for m in range(PQ_M)),
-        ),
-    )
-
-
 def pq_kmeans_recall_from(
     spark: SparkSession, sf_dir: str, cb: DataFrame, enc: DataFrame
 ) -> DataFrame:
-    """The ADC + recall phases over an already-materialized trained
-    codebook ``cb`` (m, code_id, cvec) and long-form codes ``enc`` —
-    the seam the persisted index store drives (queries and the exact
-    baseline still read the corpus vectors; codebook and codes come
-    from storage)."""
-    emb = _emb(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    wq = q.crossJoin(F.broadcast(_cb_onerow(cb)))
-
-    def qdists(m: int):
-        return F.transform(
-            _cb_subspace(m),
-            lambda c: F.struct(
-                F.lit(m).cast("long").alias("m"),
-                c["code_id"].alias("code_id"),
-                F.round(
-                    _cvec_l2sq_spark(F.col("q_emb"), c["cvec"], m), 6
-                ).alias("qdist"),
-            ),
-        )
-
-    qd = wq.select(
-        "query_id",
-        F.explode(F.concat(*[qdists(m) for m in range(PQ_M)])).alias("p"),
-    ).select("query_id", "p.m", "p.code_id", "p.qdist")
-    adc = (
-        enc.join(
-            F.broadcast(qd),
-            (enc.m == qd.m) & (enc.code == qd.code_id),
-        )
-        .where(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(
-            F.sum(F.col("qdist").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("approx_dist")
-        )
-    )
-    wk = W.partitionBy("query_id").orderBy("approx_dist", "vec_id")
-    approx = (
-        adc.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= PQ_TOPK)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .withColumn("hit", F.lit(1))
-    )
-    exact = _exact_l2_topk(spark, sf_dir)
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("hit", F.lit(0))).alias("n_hit"),
-            (
-                F.sum(F.coalesce("hit", F.lit(0))).cast("double")
-                / F.lit(float(PQ_TOPK))
-            ).alias("recall_at_k"),
-        )
+    """The ADC + recall phases over a materialized codebook ``cb``
+    (m, code_id, cvec) and its long-form codes ``enc`` — fixed
+    (ann_pq_recall), trained (ann_pq_kmeans_recall) or read from the
+    persisted index store (queries and the exact baseline still read
+    the corpus vectors)."""
+    return _recall_at_k(
+        _exact_l2_topk(spark, sf_dir), _pq_adc_topk(spark, sf_dir, cb, enc)
     )
 
 

@@ -1049,13 +1049,15 @@ class AMQPWriter(DataSourceWriter, DataSourceStreamWriter):
             self.spool_dir = None
         else:
             self.spool_dir = options["spooldir"]
-        # Batch publishes must not collide: each .save() finalizes under a
-        # unique job epoch (override with option epoch=… for deterministic
-        # names).  Streaming epochs are e<batchId> (zero-padded), stable
-        # across restarts so a replayed epoch re-renames onto the same files
+        # Each batch .save() finalizes under its own job epoch, taken here
+        # on the driver: the zero-padded wall clock in ns, so successive
+        # publishes sort in publish order (the spool's consumption order),
+        # plus a random suffix so concurrent publishers never collide.
+        # Streaming epochs are e<batchId> (zero-padded), stable across
+        # restarts so a replayed epoch re-renames onto the same files
         # (idempotent); two streaming queries sharing one spooldir must
         # therefore pass distinct queryName=… options to namespace epochs.
-        self.batch_epoch = options.get("epoch") or f"b{uuid.uuid4().hex[:12]}"
+        self.batch_epoch = f"b{time.time_ns():020d}-{uuid.uuid4().hex[:6]}"
         self.query_prefix = options.get("queryname", "")
 
     def _check_live_stack(self) -> None:  # pragma: no cover

@@ -130,7 +130,10 @@ def test_family_representatives_run_on_empty(spark, empty_sf_dir, name):
 #   subspace boundaries (wrong-dim distances) and ran off the array
 #   (NULL codes → Lloyd updates skipped → unrounded init centroids
 #   leaked into ann_pq_kmeans_codebook).  Now a field filter on m —
-#   identical selection whenever the codebook is full.
+#   identical selection whenever the codebook is full (_cb_subspace).
+#   The fixed codebook encodes through the same _pq_assign, so
+#   ann_pq_adc, ann_pq_recall and ann_two_stage_recall take that
+#   fallback here too.
 # ---------------------------------------------------------------------------
 
 
@@ -150,6 +153,9 @@ _ONE_ROW_ORACLED = (
     "events_zscore_anomaly",
     "ann_pq_kmeans_codebook",
     "ann_pq_kmeans_recall",
+    "ann_pq_adc",
+    "ann_pq_recall",
+    "ann_two_stage_recall",
     "events_funnel",
     "events_holt_daily",
     "dedup_minhash_recall",

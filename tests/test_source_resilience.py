@@ -503,6 +503,23 @@ def test_sink_epochs_sort_in_batch_order(tmp_path):
     assert _ids(rows) == [f"m{i}" for i in range(12)]
 
 
+def test_batch_publishes_sort_in_publish_order(spark, tmp_path):
+    """Six successive one-row batch publishes into one spool read back
+    through the simple reader in publish order: each ``.save()`` names
+    its files after the ones before it, as the spool's filename-order
+    contract requires."""
+    from streaming_amqp_spark import api
+
+    out = str(tmp_path / "pub")
+    for i in range(6):
+        (tmp_path / f"src{i}").mkdir()
+        src = _write_spool(tmp_path / f"src{i}", [{"message_id": f"pub{i}"}])
+        api.publish(api.read_batch(spark, transport="spool", spooldir=src), out)
+    r = _reader(out)
+    rows, _ = r.read(r.initialOffset())
+    assert _ids(rows) == [f"pub{i}" for i in range(6)]
+
+
 def test_batch_read_drops_malformed_lines(spark, tmp_path):
     register_amqp_source(spark)
     spool = tmp_path / "spool"

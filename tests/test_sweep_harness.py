@@ -68,6 +68,42 @@ class TestOnlyNameGuard:
         assert got == ["q_a,q_b", "q_c"]
 
 
+class TestSweepToolsRefuseUnknownNames:
+    """The determinism and row-order sweeps refuse an unregistered
+    ``--only`` name (a typo, a comma list) before any SparkSession is
+    built, as oracle_sweep.py does, instead of sweeping it as a red
+    FAIL line."""
+
+    def _run(self, monkeypatch, capsys, tool, *extra):
+        import streaming_amqp_spark.session as session
+
+        built = []
+
+        def get_spark(*args, **kwargs):
+            built.append(args)
+            raise AssertionError("a SparkSession was built")
+
+        monkeypatch.setattr(session, "get_spark", get_spark)
+        argv = [tool.__file__, "--only", "q1_pricing_summary,bogus", *extra]
+        monkeypatch.setattr(sys, "argv", argv)
+        assert tool.main() == 1
+        assert "REFUSED: unknown query names ['q1_pricing_summary,bogus']" in (
+            capsys.readouterr().out
+        )
+        assert built == []
+
+    def test_determinism_sweep(self, monkeypatch, capsys):
+        import determinism_sweep
+
+        self._run(monkeypatch, capsys, determinism_sweep)
+
+    def test_roworder_sweep(self, monkeypatch, capsys, tmp_path):
+        import roworder_sweep
+
+        self._run(monkeypatch, capsys, roworder_sweep, "--base", str(tmp_path))
+        assert os.listdir(tmp_path) == []  # no permuted twin synthesized
+
+
 class TestOracleViewRegistration:
     def _sf_copy(self, tmp_path) -> str:
         d = tmp_path / "sf"

@@ -85,7 +85,15 @@ def main() -> int:
     args = ap.parse_args()
 
     sys.path.insert(0, REPO)
-    from oracle_sweep import parse_state, state_header
+    import __spark_entry__ as e
+    from oracle_sweep import parse_state, state_header, unknown_names
+
+    qs = e.queries()
+    # validate names BEFORE paying JVM startup
+    unknown = unknown_names(args.only, qs)
+    if unknown:
+        print(f"REFUSED: unknown query names {unknown}")
+        return 1
 
     done: set[str] = set()
     header = state_header(args.sf_dir) + f"|{_SYNTH_VERSION}"
@@ -104,10 +112,8 @@ def main() -> int:
     from streaming_amqp_spark.session import get_spark
 
     spark = get_spark("roworder-sweep")
-    import __spark_entry__ as e
     from tests.oracle import canon
 
-    qs = e.queries()
     names = sorted(args.only or qs)
 
     def clear_shared_cache() -> None:
