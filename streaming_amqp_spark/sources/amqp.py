@@ -104,17 +104,19 @@ def _json_encode_body(body: Any) -> tuple[str | None, str | None, bytes | None]:
 
 @lru_cache(maxsize=4096)
 def _parse_iso_ts(ts_str: str) -> datetime:
-    """ISO-8601 → naive-UTC datetime, memoized: AMQP bursts commonly carry
-    repeated (sender-batched, second-granularity) timestamps, and datetime
-    objects are immutable so sharing one instance across rows is safe."""
-    ingest = datetime.fromisoformat(ts_str)
-    if ingest.tzinfo is not None:
-        ingest = ingest.astimezone(timezone.utc).replace(tzinfo=None)
-    return ingest
+    """ISO-8601 → UTC datetime, a naive one read as local time (as the
+    stock TimestampType converter's ``astimezone`` reads it), memoized:
+    AMQP bursts commonly carry repeated (sender-batched,
+    second-granularity) timestamps, and datetime objects are immutable so
+    sharing one instance across rows is safe.  The memo takes the local
+    zone as fixed for the life of the process."""
+    return datetime.fromisoformat(ts_str).astimezone(timezone.utc)
 
 
 def _msg_to_row(msg: dict) -> tuple:
-    """One spool/transport message dict → one envelope-schema row."""
+    """One spool/transport message dict → one envelope-schema row.  Raises
+    (ValueError, TypeError, AttributeError, OverflowError) on a message
+    whose fields do not convert; the spool-line rule drops those lines."""
     body_type, body_json, body_bin = _json_encode_body(msg.get("body"))
     if msg.get("body_b64") is not None:  # spool-file binary bodies
         body_type, body_json = "data", None
@@ -122,9 +124,7 @@ def _msg_to_row(msg: dict) -> tuple:
     if ts_str := msg.get("ingest_ts"):
         ingest = _parse_iso_ts(ts_str)
     else:
-        ingest = datetime.fromtimestamp(time.time(), tz=timezone.utc).replace(
-            tzinfo=None
-        )
+        ingest = datetime.fromtimestamp(time.time(), tz=timezone.utc)
     props = msg.get("application_properties") or None
     annotations = msg.get("message_annotations") or None
     return (
@@ -148,14 +148,23 @@ def _msg_to_row(msg: dict) -> tuple:
 # PySpark's Python-data-source worker accepts either tuples or
 # ``pyarrow.RecordBatch``es from ``read()``.  The tuple path runs a
 # per-row, per-column converter loop (plan_data_source_read.records_to_
-# arrow_batches) that measures ~27 µs/row on the 11-column envelope —
-# 4× the cost of the JSON parse itself.  Building the RecordBatch here,
-# column-wise, keeps the JVM↔Python boundary columnar end to end and
-# was measured bit-equal to the tuple path (same pa schema, same values,
-# including bool/int→string coercion, map-entry and tz normalization).
+# arrow_batches) that measures ~27 µs/row on the 11-column envelope, so
+# every source hands the worker envelope RecordBatches.  A spool byte
+# range becomes one through ``_parse_spool_batch``, in one of two ways:
+#
+# - columnar (``_columnar_spool_batch``): one ``pyarrow.json`` parse of the
+#   range's ``{...}`` lines and ``pyarrow.compute`` for the derived
+#   columns, about 1.5 µs/msg;
+# - row by row (``_parse_spool_lines`` → ``_msg_to_row`` →
+#   ``_rows_to_arrow_batch``), about 8–10 µs/msg: the spool-line rule itself,
+#   and the path of any range the columnar parse cannot vouch for.
+#
+# ``_rows_to_arrow_batch`` builds the batch column-wise and is pinned
+# bit-equal to the stock tuple path (same pa schema, same values, including
+# bool/int→string coercion, map-entry and tz normalization); the columnar
+# parse is pinned bit-equal to the row path.
 
 _ARROW_ENV: tuple | None = None  # (pyarrow module, envelope arrow schema)
-ARROW_ROWS_PER_BATCH = 16384  # flush granularity; bounds per-batch memory
 
 
 def _arrow_env():
@@ -179,9 +188,8 @@ def _coerce_str(v):
 
 
 def _rows_to_arrow_batch(rows: list[tuple]):
-    """Envelope row tuples (``_msg_to_row`` output) → one RecordBatch.
-    Callers pass a non-empty list: the simple reader and
-    ``_spool_range_batches`` both flush only non-empty buffers.
+    """Envelope row tuples (``_msg_to_row`` output) → one RecordBatch (an
+    empty list gives an empty batch).
 
     Replicates the stock tuple-path converters exactly: string coercion,
     map dict → entry list, naive timestamp interpreted via astimezone(UTC)
@@ -194,7 +202,7 @@ def _rows_to_arrow_batch(rows: list[tuple]):
     misaligns.  The pinned bit-equality corpus test
     (tests/test_scaleout.py) remains the behavioural guard."""
     pa, schema = _arrow_env()
-    cols = list(zip(*rows))
+    cols = list(zip(*rows)) or [()] * len(schema)
     arrays = []
     for i, t in enumerate(schema.types):
         if pa.types.is_string(t):
@@ -233,49 +241,201 @@ def _rows_to_arrow_batch(rows: list[tuple]):
     return pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
-def _parse_spool_line(line: str) -> dict | None:
-    """One decoded, non-blank spool line → message dict, or None for a
-    malformed or non-object line (SURVEY §7.4.2 drop-don't-crash).  Only
-    ``_parse_spool_lines`` calls it; the whole spool-line rule is stated
-    on ``SpoolTransport``."""
+def _parse_spool_line(line: str) -> tuple | None:
+    """One decoded, non-blank spool line → envelope row, or None for a line
+    the spool-line rule drops (stated on ``SpoolTransport``).  Only
+    ``_parse_spool_lines`` calls it."""
     try:
         msg = json.loads(line)
-    except ValueError:
+        if not isinstance(msg, dict):
+            return None
+        row = _msg_to_row(msg)
+        if "\\u" in line:  # only an escape makes a lone surrogate, which
+            # Arrow cannot encode: UnicodeEncodeError here
+            json.dumps(row, ensure_ascii=False, default=str).encode()
+        return row
+    except (ValueError, TypeError, AttributeError, OverflowError):
         return None
-    return msg if isinstance(msg, dict) else None
 
 
 def _parse_spool_lines(data: bytes, max_n: int = sys.maxsize) -> tuple[list, int, int]:
-    """Spool bytes → (messages, malformed count, bytes used): the one parse
-    loop of every spool reader.  Bytes after the last newline are ignored;
-    it stops after the newline-terminated line that brings the messages to
-    ``max_n``, and ``bytes used`` ends just after that line."""
-    msgs: list[dict] = []
+    """Spool bytes → (envelope rows, malformed count, bytes used): the
+    spool-line rule, line by line.  Bytes after the last newline are
+    ignored; it stops after the newline-terminated line that brings the
+    rows to ``max_n``, and ``bytes used`` ends just after that line."""
+    rows: list[tuple] = []
     malformed = 0
     used = data.rfind(b"\n") + 1
     lines = data[:used].splitlines(keepends=True)
     for i, raw in enumerate(lines):
         line = raw.decode("utf-8", errors="replace")
         if line.strip():
-            if (msg := _parse_spool_line(line)) is not None:
-                msgs.append(msg)
+            if (row := _parse_spool_line(line)) is not None:
+                rows.append(row)
             else:
                 malformed += 1
-        if len(msgs) >= max_n and raw[-1] == 10:  # ends in b"\n"
-            return msgs, malformed, sum(map(len, lines[: i + 1]))
-    return msgs, malformed, used
+        if len(rows) >= max_n and raw[-1] == 10:  # ends in b"\n"
+            return rows, malformed, sum(map(len, lines[: i + 1]))
+    return rows, malformed, used
 
 
-SPOOL_READ_BYTES = 1 << 16  # read block of every spool reader; bounds its memory
+# The message fields a columnar parse reads, all strings; a line with any
+# other key (maps, ``body_b64``) or a non-string value fails the parse.
+_COLUMNAR_FIELDS = (
+    "message_id", "to_address", "subject", "reply_to", "correlation_id",
+    "body", "ingest_ts",
+)
+# the other keys ``AMQPWriter`` writes: a range holding one is declined
+# before any parse rather than by a failed one
+_ROW_PATH_KEYS = (b'"application_properties"', b'"message_annotations"', b'"body_b64"')
+# ``ingest_ts`` forms on which ``datetime.fromisoformat`` and Arrow's cast
+# agree; the years keep the UTC conversion inside both calendars' range.
+_ISO_TS = r"^[12]\d{3}-\d\d-\d\d[T ]\d\d:\d\d:\d\d(\.\d{1,6})?(Z|[+-]\d\d:\d\d)?$"
+_ISO_ZONE = r"(Z|[+-]\d\d:\d\d)$"
+JSON_BLOCK_BYTES = 1 << 18  # pyarrow.json's unit of parallel parse
+
+
+@lru_cache(maxsize=None)
+def _json_parse_options():
+    import pyarrow.json as pa_json
+
+    pa, _ = _arrow_env()
+    fields = pa.schema([(f, pa.string()) for f in _COLUMNAR_FIELDS])
+    return pa_json.ParseOptions(
+        explicit_schema=fields, unexpected_field_behavior="error")
+
+
+def _local_zone_is_utc() -> bool:
+    """Whether a naive timestamp read as local time is read as UTC."""
+    return time.timezone == time.altzone == 0 and time.tzname == ("UTC", "UTC")
+
+
+def _columnar_spool_batch(data: bytes, max_n: int):
+    """``_parse_spool_batch`` in one ``pyarrow.json`` call, or None where it
+    cannot vouch for the spool-line rule.
+
+    A line is well-shaped if it starts with ``{`` and ends with ``}``.  The
+    lines up to the ``max_n``-th well-shaped one are split in one numpy
+    pass; the well-shaped ones are parsed together under an explicit
+    schema of ``_COLUMNAR_FIELDS`` that refuses other fields, and the rest
+    go through ``_parse_spool_lines``.  It declines before any parse a
+    range that holds a CR up to the cut, invalid UTF-8 or a
+    ``_ROW_PATH_KEYS`` key in the well-shaped lines, or another line
+    that is ``{...}`` once stripped (the one kind that can hold a
+    message).  After the parse, which then reads each line once, the
+    result stands only if it gives one row per well-shaped line:
+    ``pyarrow.json`` treats a newline as whitespace, but a well-shaped
+    line can only continue into the next by a raw control character
+    inside a string, which it refuses, so a line of two objects is the one
+    way the rows could misalign, and it shows as an extra row.  A decline
+    after the parse (a line that is not JSON, a duplicate key or
+    non-string value, an unknown key, an ``ingest_ts`` Arrow does not
+    read as ``fromisoformat`` does) leaves the line loop to parse the
+    range again.  Naive stamps under a local zone other than UTC are
+    read by the row path's ``_parse_iso_ts``, once per distinct value."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.json as pa_json
+
+    pa, schema = _arrow_env()
+    buf = np.frombuffer(data, np.uint8)
+    ends = np.flatnonzero(buf == 10)  # each line's newline
+    if not len(ends):
+        return _rows_to_arrow_batch([]), 0, 0
+    starts = np.concatenate(([0], ends[:-1] + 1))
+    shaped = (ends > starts) & (buf[starts] == 0x7B) & (buf[ends - 1] == 0x7D)
+    taken = np.cumsum(shaped)
+    last = min(int(np.searchsorted(taken, max_n)), len(ends) - 1)
+    used = int(ends[last]) + 1
+    if data.find(b"\r", 0, used) >= 0:
+        return None
+    shaped, n = shaped[: last + 1], int(taken[last])
+    # runs of lines alike in shape, as byte ranges
+    cuts = np.flatnonzero(shaped[1:] != shaped[:-1]) + 1
+    first = np.concatenate(([0], cuts))
+    lo, hi = starts[first], ends[np.concatenate((cuts, [last + 1])) - 1] + 1
+    view = memoryview(data)
+    runs = {True: [], False: []}
+    for a, b, s in zip(lo.tolist(), hi.tolist(), shaped[first].tolist()):
+        runs[s].append(view[a:b])
+    joined, other = b"".join(runs[True]), b"".join(runs[False])
+    if any(k in joined for k in _ROW_PATH_KEYS) or any(
+        (t := line.strip()).startswith(b"{") and t.endswith(b"}")
+        for line in other.splitlines()
+    ):
+        return None
+    try:
+        joined.decode()  # pyarrow.json passes invalid UTF-8 through
+    except UnicodeDecodeError:
+        return None
+    if not n:
+        return _rows_to_arrow_batch([]), _parse_spool_lines(other)[1], used
+    # parse blocks run on Arrow's CPU pool; a block holds whole lines
+    longest = int((ends - starts)[: last + 1][shaped].max()) + 1
+    try:
+        table = pa_json.read_json(
+            pa.BufferReader(joined),
+            read_options=pa_json.ReadOptions(
+                use_threads=True, block_size=max(JSON_BLOCK_BYTES, longest)),
+            parse_options=_json_parse_options(),
+        )
+    except pa.ArrowInvalid:
+        return None
+    if table.num_rows != n:
+        return None
+    cols = {f: table.column(f).combine_chunks() for f in _COLUMNAR_FIELDS}
+    # an empty ingest_ts is stamped with the read time, like an absent one
+    ts_str = pc.if_else(pc.equal(cols["ingest_ts"], ""), None, cols["ingest_ts"])
+    if not pc.all(pc.match_substring_regex(ts_str, _ISO_TS), min_count=0).as_py():
+        return None
+    zoned = pc.match_substring_regex(ts_str, _ISO_ZONE)
+    ts_type = schema.field("ingest_ts").type
+    try:  # naive stamps as UTC; a day, hour or offset out of range fails
+        ts = pc.if_else(
+            zoned, ts_str, pc.binary_join_element_wise(ts_str, "Z", "")
+        ).cast(ts_type)
+        if not (_local_zone_is_utc() or pc.all(zoned, min_count=0).as_py()):
+            naive = pc.unique(pc.filter(ts_str, pc.invert(zoned)))
+            local = pa.array([_parse_iso_ts(s) for s in naive.to_pylist()], ts_type)
+            ts = pc.if_else(zoned, ts, pc.take(local, pc.index_in(ts_str, naive)))
+    except (ValueError, OverflowError):
+        return None
+    malformed = _parse_spool_lines(other)[1]  # lines that hold no message
+    if ts.null_count:
+        now = datetime.fromtimestamp(time.time(), tz=timezone.utc)
+        ts = ts.fill_null(pa.scalar(now, ts_type))
+    cols["ingest_ts"] = ts
+    cols["body_type"] = pc.if_else(
+        pc.is_valid(cols["body"]), pa.scalar("amqpValue"), pa.scalar(None, pa.string()))
+    arrays = [
+        cols[f] if f in cols else pa.nulls(n, t)
+        for f, t in zip(schema.names, schema.types)
+    ]
+    return pa.RecordBatch.from_arrays(arrays, schema=schema), malformed, used
+
+
+def _parse_spool_batch(data: bytes, max_n: int = sys.maxsize):
+    """Spool bytes → (envelope RecordBatch, malformed count, bytes used),
+    the contract of ``_parse_spool_lines``: the parse of every spool
+    reader.  The columnar parse where it can vouch for the result, else
+    the line loop itself."""
+    got = _columnar_spool_batch(data, max_n)
+    if got is None:
+        rows, malformed, used = _parse_spool_lines(data, max_n)
+        got = _rows_to_arrow_batch(rows), malformed, used
+    return got
+
+
+SPOOL_READ_BYTES = 1 << 20  # read block of every spool reader; bounds its memory
 
 
 def _spool_blocks(
     path: str, pos: int, hi: int, max_n: int = sys.maxsize
-) -> Iterator[tuple[list, int, int]]:
+) -> Iterator[tuple[Any, int, int]]:
     """Parse ``path`` from byte ``pos`` to ``hi`` in ``SPOOL_READ_BYTES``
     blocks, each block's unterminated tail carried into the next: yields
-    ``(messages, malformed, position after them)`` per block, and stops
-    after the line that brings the messages to ``max_n``."""
+    ``(RecordBatch, malformed, position after its rows)`` per block, and
+    stops after the line that brings the rows to ``max_n``."""
     with open(path, "rb") as f:
         f.seek(pos)
         carry = b""
@@ -283,11 +443,11 @@ def _spool_blocks(
             block := f.read(min(SPOOL_READ_BYTES, hi - pos - len(carry)))
         ):
             data = carry + block
-            msgs, malformed, used = _parse_spool_lines(data, max_n)
-            max_n -= len(msgs)
+            batch, malformed, used = _parse_spool_batch(data, max_n)
+            max_n -= batch.num_rows
             pos += used
             carry = data[used:]
-            yield msgs, malformed, pos
+            yield batch, malformed, pos
 
 
 def _spool_files(spool_dir: str) -> list[str]:
@@ -320,12 +480,13 @@ def _retry_on_disconnect(op, reconnect):
 class Transport:
     """Minimal message-delivery interface the reader drives.
 
-    ``fetch(max_n)`` returns up to max_n new messages as dicts;
-    ``settle(n)`` acknowledges the oldest n outstanding messages
-    (≡ AMQP Accepted disposition on commit).
+    ``fetch(max_n)`` returns up to max_n new messages as one envelope
+    ``pyarrow.Table`` (its chunks are the batches the reader hands Spark);
+    ``settle(n)`` acknowledges the oldest n outstanding messages (≡ AMQP
+    Accepted disposition on commit).
     """
 
-    def fetch(self, max_n: int) -> list[dict]:
+    def fetch(self, max_n: int):
         raise NotImplementedError
 
     def settle(self, n: int) -> None:
@@ -348,13 +509,24 @@ class SpoolTransport(Transport):
 
     The spool-line rule, which every spool reader (``fetch``, the simple
     reader's ``readBetweenOffsets``, ``AMQPScaleOutStreamReader``,
-    ``AMQPBatchReader``) applies through ``_parse_spool_lines``: a message
+    ``AMQPBatchReader``) applies through ``_parse_spool_batch``: a message
     is one newline-terminated line (the terminated prefix splits as
     ``bytes.splitlines`` does), decoded as UTF-8 with invalid bytes
-    replaced, parsed as a JSON object.  A blank line is skipped; a
-    malformed or non-object line is dropped (``fetch`` counts it in
-    ``malformed``); bytes after a file's last newline stay unread until
-    their newline arrives.
+    replaced, parsed as a JSON object whose fields convert to an envelope
+    row (``_msg_to_row``).  A blank line is skipped; any other line is
+    dropped (``fetch`` counts it in ``malformed``): malformed JSON, a
+    non-object, an ``ingest_ts`` that is not an ISO-8601 string, a
+    non-object ``application_properties`` or ``message_annotations``, a
+    ``body_b64`` that is not base64, a lone surrogate escape in a string.
+    Bytes after a file's last newline stay unread until their newline
+    arrives.
+
+    The rule is stated once, as the line loop ``_parse_spool_lines``.  A
+    range takes the columnar path (``_columnar_spool_batch``: the
+    well-shaped ``{...}`` lines in one ``pyarrow.json`` parse) only where
+    that path can vouch for the loop's result; any other range goes
+    through the loop itself.  ``fetch`` returns the range's batches as one
+    ``pyarrow.Table``, without a copy.
 
     ``cursor`` maps each file to the byte just past what ``fetch`` took
     (a file at byte 0 is absent); ``fetch(max_n)`` reads on from it, each
@@ -376,20 +548,21 @@ class SpoolTransport(Transport):
         self.malformed = 0
         self.cursor: dict[str, int] = {}
 
-    def fetch(self, max_n: int) -> list[dict]:
-        out: list[dict] = []
+    def fetch(self, max_n: int):
+        batches, n = [], 0
         sizes = {p: os.path.getsize(p) for p in _spool_files(self.spool_dir)}
         for path, pos, size in _ranges_between(self.cursor, sizes):
-            if len(out) >= max_n:
+            if n >= max_n:
                 break
-            for msgs, malformed, pos in _spool_blocks(
-                path, pos, size, max_n - len(out)
-            ):
-                out += msgs
+            for batch, malformed, pos in _spool_blocks(path, pos, size, max_n - n):
+                if batch.num_rows:
+                    batches.append(batch)
+                    n += batch.num_rows
                 self.malformed += malformed
             if pos:
                 self.cursor[path] = pos
-        return out
+        pa, schema = _arrow_env()
+        return pa.Table.from_batches(batches, schema)
 
 
 class QpidTransport(Transport):
@@ -456,7 +629,7 @@ class QpidTransport(Transport):
         self._unsettled = []
         self._connect()
 
-    def fetch(self, max_n: int) -> list[dict]:
+    def fetch(self, max_n: int):
         from proton import Timeout
 
         out: list[dict] = []
@@ -503,7 +676,8 @@ class QpidTransport(Transport):
             if self._since_replenish >= self._credit_threshold:
                 self._recv.receiver.flow(self._since_replenish)
                 self._since_replenish = 0
-        return out
+        pa, _ = _arrow_env()
+        return pa.Table.from_batches([_rows_to_arrow_batch([_msg_to_row(m) for m in out])])
 
     def settle(self, n: int) -> None:
         for d in self._unsettled[:n]:
@@ -597,26 +771,25 @@ class AMQPStreamReader(SimpleDataSourceStreamReader):
         if self.target_batch_s:
             admit = min(admit, self._adaptive_cap)
         # at least once: a broker redelivers what was in flight at a drop
-        msgs = _retry_on_disconnect(
+        table = _retry_on_disconnect(
             lambda: self.transport.fetch(admit), self.transport.reconnect
         )
-        rows = [_msg_to_row(m) for m in msgs]
-        if not rows:  # an unchanged offset plans no (empty) micro-batch
+        if not table.num_rows:  # an unchanged offset plans no micro-batch
             return iter(()), start
-        self._seq += len(rows)
+        self._seq += table.num_rows
         if not self.reliable:  # the transport settled them on receive
             self._settled = self._seq
         if self.target_batch_s:
             # commit(end) closes this sample into a processing duration;
             # bound the map in case an epoch is never committed (restart)
-            self._batch_done[self._seq] = (time.monotonic(), len(rows))
+            self._batch_done[self._seq] = (time.monotonic(), table.num_rows)
             while len(self._batch_done) > 64:
                 self._batch_done.pop(next(iter(self._batch_done)))
-        # One RecordBatch: Spark's prefetch cache holds it until commit.
+        # the fetched batches: Spark's prefetch cache holds them until commit
         end = {"seq": self._seq}
         if self._replayable:
             end["files"] = dict(self.transport.cursor)
-        return iter([_rows_to_arrow_batch(rows)]), end
+        return iter(table.to_batches()), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         if not self._replayable:
@@ -734,18 +907,12 @@ class _SpoolRangePartition(InputPartition):
 
 def _spool_range_batches(ranges: list[tuple[str, int, int]]) -> Iterator:
     """Newline-aligned ``(path, lo, hi)`` ranges, read by ``_spool_blocks``
-    → RecordBatches of ``ARROW_ROWS_PER_BATCH`` rows (the last may be
-    shorter): columnar all the way to the JVM (the tuple path's per-row
-    converter loop dominated the measured per-batch cost)."""
-    buf: list[tuple] = []
+    → one envelope RecordBatch per non-empty read block, columnar all the
+    way to the JVM."""
     for path, lo, hi in ranges:
-        for msgs, _, _ in _spool_blocks(path, lo, hi):
-            buf += map(_msg_to_row, msgs)
-            while len(buf) >= ARROW_ROWS_PER_BATCH:
-                yield _rows_to_arrow_batch(buf[:ARROW_ROWS_PER_BATCH])
-                del buf[:ARROW_ROWS_PER_BATCH]
-    if buf:
-        yield _rows_to_arrow_batch(buf)
+        for batch, _, _ in _spool_blocks(path, lo, hi):
+            if batch.num_rows:
+                yield batch
 
 
 class AMQPScaleOutStreamReader(DataSourceStreamReader):
@@ -895,10 +1062,9 @@ class AMQPBatchReader(DataSourceReader):
             reliable=True,
         )
         try:  # pragma: no cover
-            while batch := transport.fetch(CREDITS_DEFAULT):
-                for m in batch:
-                    yield _msg_to_row(m)
-                transport.settle(len(batch))
+            while table := transport.fetch(CREDITS_DEFAULT):
+                yield from table.to_batches()
+                transport.settle(table.num_rows)
         finally:  # pragma: no cover
             transport.close()
 
