@@ -12,8 +12,9 @@ one store lifecycle:
   Bucket stats (bsz, hub) are NOT stored: an append changes the stats
   of every bucket it lands in, so the query path re-derives them from
   the narrow band rows (``annotate_band_stats``).
-- IVF (``ann_ivf_topk_indexed``): ``centroids/`` is the trained coarse
-  quantizer; ``vectors/`` is partitioned by ``label``, so the probe
+- IVF (``ann_ivf_topk_indexed``): ``centroids/`` is the coarse
+  quantizer at zero Lloyd iterations (the label means,
+  ``similarity.ivf_centroids_of``); ``vectors/`` is partitioned by ``label``, so the probe
   join's dynamic partition pruning reads only probed clusters.
 - PQ (``ann_pq_kmeans_recall_indexed``): ``codebook/`` is the trained
   Lloyd codebook; ``codes/`` holds long-form codes partitioned by

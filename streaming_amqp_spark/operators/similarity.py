@@ -9,7 +9,9 @@ Three tiers, mirroring how an ANN service scales:
 - Random-hyperplane LSH (sign-bit bucketing): candidates only form within
   a bucket, shuffling bucket keys instead of the full cross product — the
   scale path for all-pairs near-dup.
-- Label centroids: the IVF coarse-quantizer half (assign → average).
+- IVF: one coarse quantizer, the label means refined by zero or more
+  Lloyd steps (``_ivf_centroids``); a query probes its nearest centroids
+  and searches only their clusters.
 
 Hyperplanes are fixed literals (seeded numpy), embedded identically in the
 Spark plan and the DuckDB oracle, so bucket assignments match exactly.
@@ -55,13 +57,28 @@ def _emb_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_out(_emb(spark, sf_dir), "vec_id")
 
 
+def _queries(emb: DataFrame) -> DataFrame:
+    """(query_id, q_emb): the query set, vec_id < N_QUERIES, of any
+    (vec_id, embedding) relation."""
+    return emb.where(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+
+
+def _top_k(scored: DataFrame, *order, k: int = KNN_K) -> DataFrame:
+    """``scored`` plus ``rank``: each query_id's first ``k`` rows under
+    ``order``, the caller's tie-break (every ANN ranking ends its order
+    on a unique id, so the rank is deterministic)."""
+    w = W.partitionBy("query_id").orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )
+
+
 def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id < 8)."""
     emb = _emb_wide(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    pairs = emb.crossJoin(F.broadcast(q)).where(
+    pairs = emb.crossJoin(F.broadcast(_queries(emb))).where(
         F.col("vec_id") != F.col("query_id")
     )
     scored = pairs.select(
@@ -69,13 +86,8 @@ def knn_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         cosine(F.col("q_emb"), F.col("embedding")).alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= KNN_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    return _top_k(scored, F.col("cos_sim").desc(), "neighbor_id").select(
+        "query_id", "neighbor_id", "rank", "cos_sim"
     )
 
 
@@ -94,20 +106,27 @@ WHERE rank <= {KNN_K}
 """
 
 
+def _label_means(emb: DataFrame) -> DataFrame:
+    """(label, pos, n_vecs, v): each label's mean per dimension, rounded
+    to 6 — the one definition of the IVF coarse quantizer's starting
+    point.  posexplode → one shuffle on (label, pos); cross-engine
+    sum-order ulps are ~1e-15 on these magnitudes, far below the
+    rounding unit."""
+    return (
+        emb.select("label", F.posexplode(F.col("embedding")).alias("pos", "val"))
+        .groupBy("label", "pos")
+        .agg(
+            F.count("*").alias("n_vecs"),
+            F.round(F.sum(F.col("val").cast("double")) / F.count("*"), 6).alias(
+                "v"
+            ),
+        )
+    )
+
+
 def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroids (IVF coarse quantizer): posexplode → one shuffle
-    on (label, dim).  avg is rounded(6): cross-engine sum-order ulps are
-    ~1e-15 on these magnitudes, far below the rounding unit."""
-    emb = _emb(spark, sf_dir)
-    exploded = emb.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
-    )
-    return exploded.groupBy("label", "pos").agg(
-        F.count("*").alias("n_vecs"),
-        F.round(F.sum(F.col("val").cast("double")) / F.count("*"), 6).alias(
-            "avg_val"
-        ),
-    )
+    """Per-label centroids (the IVF label means) in long form."""
+    return _label_means(_emb(spark, sf_dir)).withColumnRenamed("v", "avg_val")
 
 
 _CENTROID_SQL = """
@@ -201,8 +220,9 @@ WHERE {sql_cosine('a.embedding', 'b.embedding', DIMS)} >= {NEAR_DUP_COS}
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse-quantize with the per-label centroids, then
-    search only the probed cluster.
+    """IVF-style ANN: coarse-quantize with the label centroids (the
+    quantizer at zero Lloyd iterations), then search only the probed
+    cluster.
 
     The two-phase shape is the scalable one: phase 1 scores Q queries
     against K centroids (tiny, broadcast), phase 2 scans only ~N/K vectors
@@ -214,18 +234,15 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     before use, so every downstream cosine is computed from identical
     inputs → bit-identical results.
     """
-    emb = _emb(spark, sf_dir)
-    return ivf_topk_from(emb, _ivf_label_centroids(spark, sf_dir))
+    return ivf_topk_from(_emb(spark, sf_dir), _ivf_centroids(spark, sf_dir))
 
 
 def ivf_centroids_of(emb: DataFrame) -> DataFrame:
-    """Per-label mean centroids, rounded to 6 decimals (the
-    oracle-checked definition shared by the IVF searches and the
-    persisted index build)."""
+    """(c_label, centroid double[64]): the label means as arrays — the
+    coarse quantizer at zero Lloyd iterations, which the IVF searches
+    probe and the persisted index build stores."""
     return (
-        emb.select("label", F.posexplode(F.col("embedding")).alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.sum(F.col("val").cast("double")) / F.count("*"), 6).alias("v"))
+        _label_means(emb)
         .groupBy("label")
         .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
         .select(
@@ -235,19 +252,40 @@ def ivf_centroids_of(emb: DataFrame) -> DataFrame:
     )
 
 
-def _ivf_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached per-label centroid table for the registered corpus
-    — ann_ivf_topk (and through it ann_ivf_recall) and
-    ann_two_stage_recall's coarse probe all consume the IDENTICAL
-    |labels|-row relation; uncached, each reference re-ran the
-    posexplode + two-aggregate corpus pass (the
-    test_tiny_aggregate_reuse_is_cached class)."""
+def _ivf_centroids(
+    spark: SparkSession, sf_dir: str, iters: int = 0
+) -> DataFrame:
+    """The session-cached coarse quantizer (c_label, centroid) of the
+    registered corpus after ``iters`` Lloyd steps.  At zero steps it is
+    the label means (ivf_centroids_of), which ann_ivf_topk,
+    ann_ivf_recall and ann_two_stage_recall probe; Lloyd starts from
+    that cached entry, so the trained quantizer (IVF_KM_ITERS steps)
+    that ann_ivf_kmeans_recall and ann_ivf_balance read costs no second
+    label-mean corpus pass."""
     from streaming_amqp_spark.tables import shared_cache
 
-    return shared_cache(
-        spark,
-        ("ivf_label_centroids", sf_dir),
-        lambda: ivf_centroids_of(_emb(spark, sf_dir)),
+    def build() -> DataFrame:
+        if not iters:
+            return ivf_centroids_of(_emb(spark, sf_dir))
+        return _ivf_km_centroids(
+            _emb_wide(spark, sf_dir), _ivf_centroids(spark, sf_dir), iters
+        )
+
+    return shared_cache(spark, ("ivf_centroids", sf_dir, iters), build)
+
+
+def _ivf_probe(q: DataFrame, cent: DataFrame, nprobe: int = 1) -> DataFrame:
+    """(query_id, q_emb, probe_label): each query's ``nprobe`` nearest
+    centroids of ``cent`` by cosine, ties to the smaller label — a
+    K×Q cross join against the broadcast centroid table."""
+    scored = q.crossJoin(F.broadcast(cent)).select(
+        "query_id",
+        "q_emb",
+        "c_label",
+        cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
+    )
+    return _top_k(scored, F.col("c_cos").desc(), "c_label", k=nprobe).select(
+        "query_id", "q_emb", F.col("c_label").alias("probe_label")
     )
 
 
@@ -256,23 +294,9 @@ def ivf_topk_from(vec: DataFrame, cent: DataFrame) -> DataFrame:
     relation and (c_label, centroid) table — the seam the persisted
     index store (operators/index_store.py) drives with parquet-backed
     relations."""
-    q = vec.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    # phase 1: nearest centroid per query (K×Q tiny cross join)
-    scored_c = q.crossJoin(F.broadcast(cent)).select(
-        "query_id",
-        "q_emb",
-        "c_label",
-        cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("c_cos").desc(), F.col("c_label"))
-    probe = (
-        scored_c.withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") == 1)
-        .select("query_id", "q_emb", F.col("c_label").alias("probe_label"))
-    )
-    # phase 2: exact search inside the probed cluster only
+    # phase 1: nearest centroid per query; phase 2: exact search inside
+    # the probed cluster only
+    probe = _ivf_probe(_queries(vec), cent)
     cand = vec.join(
         F.broadcast(probe), vec.label == probe.probe_label
     ).where(F.col("vec_id") != F.col("query_id"))
@@ -281,11 +305,8 @@ def ivf_topk_from(vec: DataFrame, cent: DataFrame) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         cosine(F.col("q_emb"), F.col("embedding")).alias("cos_sim"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= KNN_K)
-        .select("query_id", "neighbor_id", "rank", "cos_sim")
+    return _top_k(scored, F.col("cos_sim").desc(), "neighbor_id").select(
+        "query_id", "neighbor_id", "rank", "cos_sim"
     )
 
 
@@ -731,11 +752,8 @@ def _pq_query_dists(emb: DataFrame, cb: DataFrame) -> DataFrame:
     """(query_id, m, code_id, qdist): each query's distance to every
     code of its subspace, rounded to 6 — the |Q|·PQ_M·PQ_K-row ADC
     lookup table, by the encoder's distance (_code_l2sq)."""
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
     qdist = _code_l2sq(F.col("q_emb"), F.col("cvec"), F.col("m").cast("int"))
-    return q.crossJoin(F.broadcast(cb)).select(
+    return _queries(emb).crossJoin(F.broadcast(cb)).select(
         "query_id", "m", "code_id", F.round(qdist, 6).alias("qdist")
     )
 
@@ -762,16 +780,8 @@ def _pq_adc_topk(
             .alias("approx_dist")
         )
     )
-    w = W.partitionBy("query_id").orderBy("approx_dist", "vec_id")
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= PQ_TOPK)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "rank",
-            "approx_dist",
-        )
+    return _top_k(adc, "approx_dist", "vec_id").select(
+        "query_id", F.col("vec_id").alias("neighbor_id"), "rank", "approx_dist"
     )
 
 
@@ -861,12 +871,8 @@ def _exact_l2_topk(spark, sf_dir: str) -> DataFrame:
 
     def _build() -> DataFrame:
         emb = _emb(spark, sf_dir)
-        q = emb.where(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
         scored = (
-            emb.crossJoin(F.broadcast(q))
+            emb.crossJoin(F.broadcast(_queries(emb)))
             .where(F.col("vec_id") != F.col("query_id"))
             .select(
                 "query_id",
@@ -876,11 +882,8 @@ def _exact_l2_topk(spark, sf_dir: str) -> DataFrame:
                 ),
             )
         )
-        we = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-        return (
-            scored.withColumn("rank", F.row_number().over(we))
-            .where(F.col("rank") <= PQ_TOPK)
-            .select("query_id", "neighbor_id")
+        return _top_k(scored, "d", "neighbor_id").select(
+            "query_id", "neighbor_id"
         )
 
     return shared_cache(spark, ("exact_l2_topk", sf_dir), _build)
@@ -938,97 +941,92 @@ IVF_KM_ITERS = 2
 
 
 def _ivf_km_trained(spark, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Session-cached (trained centroids, final assignment) for the
+    """(trained centroids, final assignment (vec_id, c_label)) for the
     registered corpus — ann_ivf_kmeans_recall and ann_ivf_balance both
-    consume them, and without the cache each would re-run the Lloyd
-    lineage and the corpus-wide assignment scan (the
-    _chunk_hash_relation discipline)."""
+    consume them; the assignment is session-cached beside the
+    centroids, or each query would re-run the corpus-wide assignment
+    scan."""
     from streaming_amqp_spark.tables import shared_cache
 
-    cb = shared_cache(
-        spark,
-        ("ivf_km_centroids", sf_dir),
-        lambda: _ivf_km_centroids(_emb_wide(spark, sf_dir)),
-    )
+    cb = _ivf_centroids(spark, sf_dir, IVF_KM_ITERS)
     assigned = shared_cache(
         spark,
         ("ivf_km_assign", sf_dir),
         lambda: _ivf_km_assign(_emb_wide(spark, sf_dir), cb).select(
-            "vec_id", "cl"
+            "vec_id", "c_label"
         ),
     )
     return cb, assigned
 
 
-def _ivf_km_centroids(emb: DataFrame, iters: int = IVF_KM_ITERS) -> DataFrame:
-    """(cl, centroid double[64]): the label means refined by ``iters``
-    full-dimension Lloyd steps — label partitions are an arbitrary
-    bootstrap; the trained coarse quantizer is what real IVF ships.
-    Same determinism recipe as _pq_train_kmeans: left-chain L2
-    assignment with array_min struct tie-breaks (ties → smallest cl ≡
-    ORDER BY d, cl), DECIMAL-exact means, empty clusters keep their
-    centroid, the K-row iterate localCheckpoint'd per iteration.
+def _ivf_km_centroids(emb: DataFrame, cb: DataFrame, iters: int) -> DataFrame:
+    """(c_label, centroid double[64]): the centroids ``cb`` refined by
+    ``iters`` full-dimension Lloyd steps over ``emb`` — zero steps is
+    ``cb`` itself.  Label partitions are an arbitrary bootstrap; the
+    trained coarse quantizer is what real IVF ships.  Same determinism
+    recipe as _pq_train_kmeans: left-chain L2 assignment with array_min
+    struct tie-breaks (ties → smallest label ≡ ORDER BY d, cl),
+    DECIMAL-exact means, empty clusters keep their centroid.  Each
+    step's K-row means are localCheckpoint'd, so the iterate is ``cb``
+    joined to one materialized table per step: T steps cost T corpus
+    scans, not 2^T plan re-derivations, and ``cb`` stays read once.
 
     Scale: one corpus scan per iteration against the broadcast K-row
-    codebook + one (cl, dim)-keyed 640-cell shuffle — the MLlib k-means
-    shape at K=|labels|."""
-    cb = (
-        emb.select("label", F.posexplode(F.col("embedding")).alias("pos", "val"))
-        .groupBy("label", "pos")
-        .agg(
-            F.round(F.sum(F.col("val").cast("double")) / F.count("*"), 6).alias(
-                "v"
-            )
-        )
-        .groupBy(F.col("label").alias("cl"))
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "v"))).alias("pv"))
-        .select("cl", F.transform("pv", lambda s: s["v"]).alias("centroid"))
-    )
+    codebook + one (label, dim)-keyed 640-cell shuffle — the MLlib
+    k-means shape at K=|labels|."""
     for _ in range(iters):
-        a = _ivf_km_assign(emb, cb)
-        vals = a.select(
-            "cl", F.posexplode("embedding").alias("dim", "val")
+        vals = _ivf_km_assign(emb, cb).select(
+            "c_label", F.posexplode("embedding").alias("dim", "val")
         )
         p = F.round(F.col("val").cast("double"), 9).cast("decimal(38,12)")
-        means = vals.groupBy("cl", "dim").agg(
+        means = vals.groupBy("c_label", "dim").agg(
             (F.sum(p).cast("double") / F.count("*")).alias("mu")
         )
-        newc = means.groupBy("cl").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "mu"))),
-                lambda s: s["mu"],
-            ).alias("centroid_new")
+        newc = (
+            means.groupBy("c_label")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("dim", "mu"))),
+                    lambda s: s["mu"],
+                ).alias("centroid_new")
+            )
+            .localCheckpoint(eager=False)
         )
         cb = (
             # newc is K rows; post-aggregate size estimates are garbage,
             # and without the hint the planner sort-merge-joined the
             # K-row iterate every iteration (r15: −25% per training run)
-            cb.join(F.broadcast(newc), "cl", "left")
+            cb.join(F.broadcast(newc), "c_label", "left")
             .select(
-                "cl",
+                "c_label",
                 F.coalesce("centroid_new", F.col("centroid")).alias(
                     "centroid"
                 ),
             )
-            .localCheckpoint(eager=False)
         )
     return cb
 
 
-def _ivf_km_assign(emb: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, embedding, cl): nearest trained centroid by full-dim L2."""
+def _ivf_km_assign(
+    df: DataFrame, cb: DataFrame, vec: str = "embedding"
+) -> DataFrame:
+    """``df`` plus ``c_label``: the label of the centroid of ``cb``
+    nearest to each row's ``vec`` by full-dim L2 — Lloyd's step, the
+    final corpus assignment and ann_ivf_kmeans_recall's query probe."""
     one = cb.agg(
-        F.sort_array(F.collect_list(F.struct("cl", "centroid"))).alias("cbs")
+        F.sort_array(F.collect_list(F.struct("c_label", "centroid"))).alias(
+            "cbs"
+        )
     )
     scored = F.transform(
         F.col("cbs"),
         lambda c: F.struct(
-            _l2sq_full_spark(F.col("embedding"), c["centroid"]).alias("d"),
-            c["cl"].alias("cl"),
+            _l2sq_full_spark(F.col(vec), c["centroid"]).alias("d"),
+            c["c_label"].alias("c_label"),
         ),
     )
-    return emb.crossJoin(F.broadcast(one)).select(
-        "vec_id", "embedding", F.array_min(scored)["cl"].alias("cl")
+    return df.crossJoin(F.broadcast(one)).select(
+        *df.columns, F.array_min(scored)["c_label"].alias("c_label")
     )
 
 
@@ -1037,8 +1035,8 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nearest refined centroid, search exactly (full-dim L2) inside
     that cluster's ASSIGNED members only, measure against the exact-L2
     top-k baseline.  Output per query: probed-cluster size, hits,
-    recall — vs `ann_ivf_recall`, which runs the same panel on the raw
-    label partitions this quantizer bootstraps from.
+    recall — vs `ann_ivf_recall`, which runs the same panel on the
+    quantizer at zero Lloyd iterations (the label partitions).
 
     Scale: probing is Q×K against the broadcast trained centroids; the
     candidate scan reads one cluster (at 100 TB the assignment is a
@@ -1046,25 +1044,10 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists only to measure recall."""
     emb = _emb(spark, sf_dir)
     cb, assigned = _ivf_km_trained(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    one = cb.agg(
-        F.sort_array(F.collect_list(F.struct("cl", "centroid"))).alias("cbs")
-    )
-    probe_scored = F.transform(
-        F.col("cbs"),
-        lambda c: F.struct(
-            _l2sq_full_spark(F.col("q_emb"), c["centroid"]).alias("d"),
-            c["cl"].alias("cl"),
-        ),
-    )
-    probe = q.crossJoin(F.broadcast(one)).select(
-        "query_id", "q_emb", F.array_min(probe_scored)["cl"].alias("probe_cl")
-    )
+    probe = _ivf_km_assign(_queries(emb), cb, "q_emb")
     cand = (
         emb.join(assigned, "vec_id")
-        .join(F.broadcast(probe), F.col("cl") == F.col("probe_cl"))
+        .join(F.broadcast(probe), "c_label")
         .where(F.col("vec_id") != F.col("query_id"))
     )
     ncand = cand.groupBy("query_id").agg(F.count("*").alias("n_candidates"))
@@ -1073,12 +1056,10 @@ def ann_ivf_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("neighbor_id"),
         _l2sq_full_spark(F.col("q_emb"), F.col("embedding")).alias("d"),
     )
-    wk = W.partitionBy("query_id").orderBy("d", "neighbor_id")
-    found = scored.withColumn("rank", F.row_number().over(wk)).where(
-        F.col("rank") <= PQ_TOPK
-    )
     return (
-        _recall_at_k(_exact_l2_topk(spark, sf_dir), found)
+        _recall_at_k(
+            _exact_l2_topk(spark, sf_dir), _top_k(scored, "d", "neighbor_id")
+        )
         .join(ncand, "query_id")
         .select("query_id", "n_candidates", "n_hit", "recall_at_k")
     )
@@ -1198,14 +1179,18 @@ def ann_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster is a skewed partition (one probe scans it all), and a high
     mean distance says the coarse quantizer under-fits.  Reuses the
     trained centroids and assignment of ann_ivf_kmeans_recall; one
-    corpus scan + a K-row aggregate."""
+    corpus scan + a K-row aggregate.  The output names the cluster
+    ``cl``."""
     emb = _emb(spark, sf_dir)
     cb, assigned = _ivf_km_trained(spark, sf_dir)
     a = assigned.join(emb.select("vec_id", "embedding"), "vec_id")
     d2 = _l2sq_full_spark(F.col("embedding"), F.col("centroid"))
     per = (
-        a.join(F.broadcast(cb), "cl")
-        .select("cl", F.round(d2, 9).cast("decimal(38,12)").alias("d2"))
+        a.join(F.broadcast(cb), "c_label")
+        .select(
+            F.col("c_label").alias("cl"),
+            F.round(d2, 9).cast("decimal(38,12)").alias("d2"),
+        )
         .groupBy("cl")
         .agg(
             F.count("*").alias("n_vecs"),
@@ -1271,30 +1256,13 @@ def ann_two_stage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the candidate scan reads only probed partitions); the ADC
     re-rank shuffles map-side-combined DECIMAL sums for candidate pairs
     only (|cands| ≪ N·Q).  The exact baseline exists to measure recall
-    and is dropped at scale.  The re-rank reads ann_pq_adc's fixed
-    codebook, codes and query table; a trained codebook drops in
-    through the same encoder and _pq_query_dists."""
+    and is dropped at scale.  The coarse probe is ann_ivf_topk's
+    (_ivf_probe over the same label centroids) at nprobe=NPROBE.  The
+    re-rank reads ann_pq_adc's fixed codebook, codes and query table; a
+    trained codebook drops in through the same encoder and
+    _pq_query_dists."""
     emb = _emb(spark, sf_dir)
-    # the coarse-probe centroid table is the same |labels|-row relation
-    # ann_ivf_topk probes — session-cached (one posexplode corpus pass
-    # per sf per session instead of one per query)
-    cent = _ivf_label_centroids(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored_c = q.crossJoin(F.broadcast(cent)).select(
-        "query_id",
-        "c_label",
-        cosine(F.col("q_emb"), F.col("centroid")).alias("c_cos"),
-    )
-    wq = W.partitionBy("query_id").orderBy(
-        F.col("c_cos").desc(), F.col("c_label")
-    )
-    probe = (
-        scored_c.withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= NPROBE)
-        .select("query_id", F.col("c_label").alias("probe_label"))
-    )
+    probe = _ivf_probe(_queries(emb), _ivf_centroids(spark, sf_dir), NPROBE)
     # r15: cand feeds BOTH the ADC re-rank and the n_candidates rollup;
     # without DAG CSE the whole coarse phase (centroid scoring, probe
     # window, label join) re-expanded per reference.  Lazy
@@ -1325,11 +1293,8 @@ def ann_two_stage_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("approx_dist")
         )
     )
-    wk = W.partitionBy("query_id").orderBy("approx_dist", "vec_id")
-    shortlist = (
-        adc.withColumn("rank", F.row_number().over(wk))
-        .where(F.col("rank") <= PQ_TOPK)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
+    shortlist = _top_k(adc, "approx_dist", "vec_id").select(
+        "query_id", F.col("vec_id").alias("neighbor_id")
     )
     return (
         _recall_at_k(_exact_l2_topk(spark, sf_dir), shortlist)

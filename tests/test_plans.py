@@ -352,6 +352,71 @@ def test_minhash_band_relation_is_cached(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _cached(df):
+    """The InMemoryRelation the session's cache manager holds for ``df``."""
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    hit = cm.lookupCachedData(df._jdf)
+    assert hit.isDefined(), "relation is not cached"
+    return hit.get().cachedRepresentation()
+
+
+def _buffers_id(relation) -> int:
+    return relation.cacheBuilder().cachedColumnBuffers().id()
+
+
+def _cache_reads(plan) -> list[int]:
+    """Buffer ids of the cached relations that the InMemoryTableScans of
+    the physical ``plan`` read, walking into cached plans and executed
+    adaptive query stages too, so a cache read inside another cache's
+    build counts."""
+    ids, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        name = node.nodeName()
+        if name == "InMemoryTableScan":
+            ids.append(_buffers_id(node.relation()))
+        elif name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        for seq in (node.children(), node.innerChildren()):
+            it = seq.iterator()
+            while it.hasNext():
+                todo.append(it.next())
+    return ids
+
+
+def test_ivf_coarse_quantizer_is_one_cached_relation(
+    spark, sf_dir, monkeypatch
+):
+    """The label centroids are the coarse quantizer at zero Lloyd
+    iterations, session-cached once: Lloyd's plan (the trained entry's
+    cached plan) reads that entry through InMemoryTableScan instead of
+    a second label-mean corpus pass, ann_ivf_topk's plan reads it, and
+    ann_ivf_topk and ann_two_stage_recall hand that same relation to
+    the cosine probe (the two-stage probe sits inside a per-query
+    checkpoint, so its plan cannot show the read)."""
+    from streaming_amqp_spark.operators import similarity as S
+
+    zero = S._ivf_centroids(spark, sf_dir)
+    zero_id = _buffers_id(_cached(zero))
+    trained = S._ivf_centroids(spark, sf_dir, S.IVF_KM_ITERS)
+    assert _cache_reads(_cached(trained).cachedPlan()).count(zero_id) == 1
+
+    probed = []
+    real_probe = S._ivf_probe
+
+    def probe(q, cent, nprobe=1):
+        probed.append((nprobe, cent is zero))
+        return real_probe(q, cent, nprobe)
+
+    monkeypatch.setattr(S, "_ivf_probe", probe)
+    topk = _QUERIES["ann_ivf_topk"](spark, sf_dir)
+    assert zero_id in _cache_reads(topk._jdf.queryExecution().executedPlan())
+    _QUERIES["ann_two_stage_recall"](spark, sf_dir)
+    assert probed == [(1, True), (S.NPROBE, True)]
+
+
 def test_simhash_relation_is_cached(spark, sf_dir):
     """dedup_simhash_hamming1 references the per-doc simhash relation four
     times (probe side, bucket stats, cold side + stats join — the two

@@ -763,6 +763,29 @@ def test_ivf_kmeans_recall_beats_label_partitions(spark, sf_dir):
     assert sum(trained) / len(trained) > sum(label) / len(label)
 
 
+def test_ivf_zero_iteration_centroids_are_the_label_means(spark, sf_dir):
+    """One coarse quantizer: the cached zero-iteration centroids are
+    ivf_centroids_of over the corpus row for row (the relation the index
+    build stores), and Lloyd from that entry trains the same centroids
+    as Lloyd from label means summed over the fanned-out scan, whose
+    partial sums run in another order before round(6)."""
+    from streaming_amqp_spark.operators import similarity as S
+
+    def same(a, b):
+        return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+    emb, wide = S._emb(spark, sf_dir), S._emb_wide(spark, sf_dir)
+    zero = S._ivf_centroids(spark, sf_dir)
+    assert zero.count() == 10
+    assert same(zero, S.ivf_centroids_of(emb))
+    trained = S._ivf_centroids(spark, sf_dir, S.IVF_KM_ITERS)
+    assert not same(trained, zero)
+    assert same(
+        trained,
+        S._ivf_km_centroids(wide, S.ivf_centroids_of(wide), S.IVF_KM_ITERS),
+    )
+
+
 def test_cms_actually_collides(spark):
     """The CMS bound booleans must not be vacuous: with 2000 keys in
     4x256 cells, collisions are structural — a healthy sketch

@@ -104,6 +104,35 @@ class TestSweepToolsRefuseUnknownNames:
         assert os.listdir(tmp_path) == []  # no permuted twin synthesized
 
 
+class TestCapturePlansRefusesToOverwrite:
+    """tools/capture_plans.py never overwrites a capture: code comments
+    cite the plans/r16 files, so a name whose ``<name>_<tag>.txt``
+    exists is refused before any SparkSession is built."""
+
+    def test_existing_capture_is_refused(self, monkeypatch, capsys):
+        import capture_plans
+
+        path = os.path.join(
+            os.path.dirname(__file__), "..", "plans", "r16", "ann_ivf_topk_before.txt"
+        )
+        mtime = os.path.getmtime(path)
+        built = []
+
+        def get_spark(*args, **kwargs):
+            built.append(args)
+            raise AssertionError("a SparkSession was built")
+
+        monkeypatch.setattr(capture_plans, "get_spark", get_spark)
+        argv = [capture_plans.__file__, "before", "knn_cosine_topk", "ann_ivf_topk"]
+        monkeypatch.setattr(sys, "argv", argv)
+        assert capture_plans.main() == 1
+        out = capsys.readouterr().out
+        assert "REFUSED:" in out and "ann_ivf_topk_before.txt" in out
+        assert "knn_cosine_topk_before.txt" in out
+        assert built == []
+        assert os.path.getmtime(path) == mtime
+
+
 class TestOracleViewRegistration:
     def _sf_copy(self, tmp_path) -> str:
         d = tmp_path / "sf"

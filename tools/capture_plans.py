@@ -6,8 +6,11 @@ Usage:
     python tools/capture_plans.py after  [name ...]
 
 With no names, captures every bench HEADLINE query.  Writes
-plans/r16/<query>_<tag>.txt.  Plans are captured at sf0.1 (the bench
-scale) without executing the query (explain only), so this is cheap;
+plans/r16/<query>_<tag>.txt and never overwrites one: if any capture
+file the run would write already exists, it prints a REFUSED line per
+such path and exits 1 before the JVM starts (pick a new tag).  Plans
+are captured at sf0.1 (the bench scale) without executing the query
+(explain only), so this is cheap;
 note AQE plans print isFinalPlan=false — the judge-facing artifact is
 the static plan shape (Exchange count, join strategy, PushedFilters).
 """
@@ -24,7 +27,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from streaming_amqp_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def main() -> int:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     import __spark_entry__ as entrymod
     from bench import HEADLINE
@@ -36,6 +39,15 @@ def main() -> None:
         "plans",
         "r16",
     )
+    taken = [
+        path
+        for path in (os.path.join(out_dir, f"{n}_{tag}.txt") for n in names)
+        if os.path.exists(path)
+    ]
+    for path in taken:
+        print(f"REFUSED: {path} exists; captures are never overwritten")
+    if taken:
+        return 1
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(
         "capture_plans",
@@ -58,7 +70,8 @@ def main() -> None:
             fh.write(text)
         print(f"captured {name}_{tag}.txt")
     spark.stop()
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
